@@ -17,7 +17,11 @@ commit protocol (the Iceberg/Delta idea, reduced to its minimum):
   ever holds the partitions written by commit ``N``; it is never mutated.
 - The table's current state is the highest-numbered COMPLETE manifest
   ``<root>/_manifests/manifest-N.json`` mapping each live partition
-  directory name to the snapshot that owns it.
+  directory name to the snapshot that owns it (``partitions``), plus how
+  many partition dirs each still-live snapshot wrote (``snapshots``,
+  ``{"N": k}``). A commit records its own snapshot's count and carries
+  forward the entries of every snapshot that still owns a live
+  partition; entries of fully superseded snapshots are dropped.
 - A commit writes its snapshot data fully, then publishes the new
   manifest by writing a temp file and atomically PUT-if-absent-ing it
   to its final never-before-used name: ``link(2)`` on local
@@ -35,8 +39,21 @@ commit protocol (the Iceberg/Delta idea, reduced to its minimum):
 Readers reconstruct the table with one multi-path parquet scan using
 ``basePath=<root>/data`` so both the ``snap`` and user partition columns
 are recovered by standard partition discovery — ``snap`` is dropped, and
-partition pruning/pushdown still work because the paths are enumerated
-per-partition. All metadata I/O goes through the Hadoop FileSystem API so
+partition pruning/pushdown still work on the discovered values. The scan
+gets one root per live snapshot where it can: ``data/snap=N`` when every
+partition dir snapshot N wrote is still live (its ``snapshots`` count
+equals its live partitions), and per-partition paths only for a snapshot
+a later commit partly superseded. Both cover the same leaf dirs, so rows
+and inferred types do not depend on the choice; the number of roots does.
+Spark lists more than ``parallelPartitionDiscovery.threshold`` (32) roots,
+or more than 32 subdirs of one root, with a Spark job, so a table whose
+commits each write at most 32 partitions (one month of days) is now
+planned without one. A manifest written before ``snapshots`` existed has
+no such field and reads with one path per partition, as it always did; a
+commit on top of it records only its own snapshot's count, so the older
+snapshots keep the per-partition read until they are superseded.
+
+All metadata I/O goes through the Hadoop FileSystem API so
 the table can live on any supported scheme (file:, hdfs:, s3a: — with the
 usual caveat that object stores need an atomic-rename layer or a
 PUT-if-absent manifest variant, which this class isolates in
@@ -54,6 +71,7 @@ import json
 import os
 import time
 import uuid
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -316,12 +334,16 @@ class AtomicPartitionedTable:
     def exists(self) -> bool:
         return self.current_version() > 0
 
-    def _manifest(self, version: int | None = None) -> dict[str, int]:
+    def _manifest(
+        self, version: int | None = None
+    ) -> tuple[dict[str, int], dict[int, int] | None]:
         """Partition-dir-name → owning-snapshot mapping for ``version``
-        (default: current). Empty table → empty mapping."""
+        (default: current), and snapshot → partition dirs it wrote for
+        every live snapshot (``None`` for a manifest written before that
+        field existed). Empty table → empty mappings."""
         v = self.current_version() if version is None else version
         if v == 0:
-            return {}
+            return {}, {}
         if version is not None and not self._fs().exists(
             self._jpath(self.MANIFEST_DIR, f"manifest-{v}.json")
         ):
@@ -333,7 +355,10 @@ class AtomicPartitionedTable:
             self._jpath(self.MANIFEST_DIR, f"manifest-{v}.json")
         )
         doc = json.loads(text)
-        return {str(k): int(s) for k, s in doc["partitions"].items()}
+        mapping = {str(k): int(s) for k, s in doc["partitions"].items()}
+        if "snapshots" not in doc:
+            return mapping, None
+        return mapping, {int(s): int(k) for s, k in doc["snapshots"].items()}
 
     def current_partition_paths(
         self, version: int | None = None
@@ -344,8 +369,29 @@ class AtomicPartitionedTable:
         manifest (time travel)."""
         return {
             name: f"{self.root}/{self.DATA_DIR}/snap={snap}/{name}"
-            for name, snap in self._manifest(version).items()
+            for name, snap in self._manifest(version)[0].items()
         }
+
+    def scan_roots(self, version: int | None = None) -> list[str]:
+        """The paths :meth:`read` hands to its one parquet scan: the
+        snapshot dir of every snapshot whose written partitions are all
+        still live, and the partition dirs of every other live snapshot
+        (all of them, for a manifest without ``snapshots``)."""
+        mapping, wrote = self._manifest(version)
+        live = Counter(mapping.values())
+        data = f"{self.root}/{self.DATA_DIR}"
+        whole = {
+            snap for snap, n in live.items()
+            if wrote is not None and wrote.get(snap) == n
+        }
+        return sorted(
+            [f"{data}/snap={snap}" for snap in whole]
+            + [
+                f"{data}/snap={snap}/{name}"
+                for name, snap in mapping.items()
+                if snap not in whole
+            ]
+        )
 
     # ------------------------------------------------------------------
     # Read / commit / vacuum
@@ -355,7 +401,8 @@ class AtomicPartitionedTable:
         version: int | None = None,
         empty_schema=None,
     ) -> DataFrame:
-        """One multi-path parquet scan of the live partitions. basePath
+        """One multi-path parquet scan of the live partitions, one root
+        per live snapshot where it can (:meth:`scan_roots`). basePath
         recovers ``snap`` and the user partition column via standard
         partition discovery; ``snap`` is dropped.
 
@@ -370,7 +417,7 @@ class AtomicPartitionedTable:
         instead of raising. A pipeline whose incremental run saw zero
         input rows is a legitimate state, not an error; the caller
         supplies the schema because an empty table can't know it."""
-        paths = sorted(self.current_partition_paths(version).values())
+        paths = self.scan_roots(version)
         if not paths and empty_schema is not None and version is None:
             return self.spark.createDataFrame([], empty_schema)
         if not paths:
@@ -538,18 +585,23 @@ class AtomicPartitionedTable:
             fault("staged")
         for _attempt in range(self.MAX_PUBLISH_RETRIES):
             base_version = self.current_version()
-            mapping = self._manifest(None)
+            mapping, wrote = self._manifest(None)
             if replaced is not None:
                 for value in replaced:
                     mapping.pop(self.partition_dir_name(value), None)
             for name in written:
                 mapping[name] = snap
+            wrote = {**(wrote or {}), snap: len(written)}
+            live = set(mapping.values())
             version = base_version + 1
             manifest = {
                 "version": version,
                 "snapshot": snap,
                 "partition_col": self.partition_col,
                 "partitions": mapping,
+                "snapshots": {
+                    str(s): n for s, n in wrote.items() if s in live
+                },
             }
             try:
                 self._write_file_atomic(
@@ -603,7 +655,7 @@ class AtomicPartitionedTable:
         cutoff_ms = (time.time() - grace) * 1000.0
         fs = self._fs()
         current = self.current_version()
-        live_snaps = set(self._manifest().values())
+        live_snaps = set(self._manifest()[0].values())
         removed = 0
         data_path = self._jpath(self.DATA_DIR)
         statuses = fs.listStatus(data_path) if fs.exists(data_path) else []

@@ -7,7 +7,10 @@ The engine-side equivalent of the warehouse COPY hand-off is a
 export prefix and emit a manifest JSON enumerating every data file with
 its byte size and the total row count — exactly the contract a
 `COPY ... FROM manifest` warehouse load (or an external-table refresh)
-consumes. Properties:
+consumes. The row count is the rows the write itself wrote, counted by
+an ``Observation`` (``count(lit(1))``) riding that write, the way
+``IncrementalIngest`` counts silver rows: the files are never read back.
+Properties:
 
 - Atomic hand-off: the manifest is written LAST, single-file; a loader
   that keys on manifests never sees a half-written batch.
@@ -15,7 +18,7 @@ consumes. Properties:
   loader tracks consumed manifests, so replaying an export is a no-op.
 - Scale: the data files are written by executors (normal partitioned
   parquet write); only the file LISTING runs on the driver, which is
-  O(files), not O(rows).
+  O(files), not O(rows), and no Spark job runs after the write.
 
 A direct ``write.jdbc`` path is also supported behind an injectable
 writer callable so deployments with a warehouse JDBC driver on the
@@ -30,7 +33,8 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 class WarehouseExporter:
@@ -49,15 +53,21 @@ class WarehouseExporter:
         self.fmt = fmt
         self.jdbc_writer = jdbc_writer
 
+    @staticmethod
+    def _batches(base: str) -> list[tuple[int, str]]:
+        """``(n, dir name)`` of every ``batch_<n>`` dir under ``base``,
+        batch order; a dir with a non-numeric suffix (``batch_tmp``) is
+        not a batch."""
+        return sorted(
+            (int(d.split("_", 1)[1]), d)
+            for d in os.listdir(base)
+            if d.startswith("batch_") and d.split("_", 1)[1].isdigit()
+        )
+
     def _next_batch_dir(self, table: str) -> tuple[str, int]:
         base = os.path.join(self.export_dir, table)
         os.makedirs(base, exist_ok=True)
-        existing = [
-            int(d.split("_", 1)[1])
-            for d in os.listdir(base)
-            if d.startswith("batch_") and d.split("_", 1)[1].isdigit()
-        ]
-        n = max(existing, default=-1) + 1
+        n = max((n for n, _d in self._batches(base)), default=-1) + 1
         return os.path.join(base, f"batch_{n}"), n
 
     def export(self, df: DataFrame, table: str) -> str:
@@ -67,7 +77,14 @@ class WarehouseExporter:
         first), so its existence IS the completion signal."""
         batch_dir, n = self._next_batch_dir(table)
         data_dir = os.path.join(batch_dir, "data")
-        writer = df.write.mode("errorifexists")
+        # the row count rides the write as an Observation; reading the
+        # files back to count them would cost a schema-inference job and
+        # two count jobs
+        obs = Observation()
+        writer = (
+            df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.mode("errorifexists")
+        )
         if self.fmt == "csv":
             writer = writer.option("header", "true")
         getattr(writer, self.fmt)(data_dir)
@@ -85,18 +102,12 @@ class WarehouseExporter:
                     "meta": {"content_length": os.path.getsize(path)},
                 }
             )
-        row_count = (
-            df.sparkSession.read.format(self.fmt)
-            .options(**({"header": "true"} if self.fmt == "csv" else {}))
-            .load(data_dir)
-            .count()
-        )
         manifest = {
             "entries": entries,
             "table": table,
             "batch": n,
             "format": self.fmt,
-            "row_count": row_count,
+            "row_count": int(obs.get["rows"]),
             "schema": df.schema.jsonValue(),
             "exported_at_unix": int(time.time()),
         }
@@ -127,15 +138,11 @@ class WarehouseExporter:
         base = os.path.join(self.export_dir, table)
         if not os.path.isdir(base):
             return []
-        out = []
-        for d in sorted(
-            (d for d in os.listdir(base) if d.startswith("batch_")),
-            key=lambda d: int(d.split("_", 1)[1]),
-        ):
-            m = os.path.join(base, d, "manifest.json")
-            if os.path.isfile(m):
-                out.append(m)
-        return out
+        paths = (
+            os.path.join(base, d, "manifest.json")
+            for _n, d in self._batches(base)
+        )
+        return [m for m in paths if os.path.isfile(m)]
 
 
 def _schema_from_json(schema_json: dict):

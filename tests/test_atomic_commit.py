@@ -847,3 +847,150 @@ def test_publish_primitive_put_if_absent_under_true_race(spark, tmp_path):
         if name.startswith(".tmp-")
     ]
     assert litter == [], litter
+
+
+# ----------------------------------------------------------------------
+# Scan roots: read() passes one root per fully-live snapshot
+# ----------------------------------------------------------------------
+def _day(n: int) -> str:
+    return f"2024-01-{n:02d}"
+
+
+def _commit_days(spark, table, days, v=1, **kw):
+    table.commit_overwrite_partitions(
+        df_of(spark, [(d and _day(d), f"k{d}", v) for d in days]), **kw
+    )
+
+
+def _fully_live(spark, table):
+    _commit_days(spark, table, [1, 2, 3])
+    return None, 1
+
+
+def _partly_superseded(spark, table):
+    _commit_days(spark, table, [1, 2, 3])
+    _commit_days(spark, table, [2], v=20)
+    return None, 2 + 1  # snap=1's day 1 and day 3, all of snap=2
+
+
+def _partition_dropped(spark, table):
+    _commit_days(spark, table, [1, 2])
+    table.commit_overwrite_partitions(
+        df_of(spark, []), replaced=[_day(2)]
+    )
+    return None, 1  # snap=1 keeps only day 1; snap=2 wrote nothing
+
+
+def _null_partition(spark, table):
+    _commit_days(spark, table, [None, 1])
+    _commit_days(spark, table, [None], v=10)
+    return None, 1 + 1  # snap=1's day 1, all of snap=2 (the NULL dir)
+
+
+def _crashed_orphan(spark, table):
+    _commit_days(spark, table, [1, 2])
+    with pytest.raises(Boom):  # orphan snap=2, never published
+        _commit_days(spark, table, [1, 3], v=5, fault=crash_at("staged"))
+    return None, 1
+
+
+def _after_vacuum(spark, table):
+    _crashed_orphan(spark, table)
+    _commit_days(spark, table, [1], v=9)
+    table.vacuum(grace_seconds=0)  # the test owns the table exclusively
+    return None, 1 + 1  # snap=1's day 2, all of snap=3
+
+
+def _time_travel(spark, table):
+    _commit_days(spark, table, [1, 2])
+    _commit_days(spark, table, [2], v=20)
+    _commit_days(spark, table, [1, 3], v=30)
+    return 2, 1 + 1  # as of v2: snap=1's day 1, all of snap=2
+
+
+def _legacy_manifest(spark, table):
+    """Re-publish the current state the way a writer that predates the
+    ``snapshots`` field wrote it."""
+    import json
+
+    _commit_days(spark, table, [1, 2])
+    _commit_days(spark, table, [3])
+    version = table.current_version()
+    doc = json.loads(table._read_small_file(
+        table._jpath(table.MANIFEST_DIR, f"manifest-{version}.json")
+    ))
+    del doc["snapshots"]
+    doc["version"] = version + 1
+    table._write_file_atomic(
+        table.MANIFEST_DIR, f"manifest-{version + 1}.json", json.dumps(doc)
+    )
+    return None, 3  # one path per partition, as before the field
+
+
+def _commit_on_legacy_manifest(spark, table):
+    _legacy_manifest(spark, table)
+    _commit_days(spark, table, [4])
+    return None, 3 + 1  # legacy snapshots per partition, snap=3 whole
+
+
+@pytest.mark.parametrize("build", [
+    _fully_live, _partly_superseded, _partition_dropped, _null_partition,
+    _crashed_orphan, _after_vacuum, _time_travel, _legacy_manifest,
+    _commit_on_legacy_manifest,
+], ids=lambda f: f.__name__.lstrip("_"))
+def test_scan_roots_read_equals_per_partition_read(spark, tmp_path, build):
+    """read() hands its one parquet scan a ``snap=N`` root for every
+    snapshot whose written partitions are all live, and per-partition
+    paths only for partly superseded snapshots (all of them under a
+    manifest without ``snapshots``). Rows and schema, including the
+    inferred partition type, must equal a read of one path per live
+    partition."""
+    import re
+
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+    version, want_roots = build(spark, table)
+    got = table.read(version=version)
+    want = (
+        spark.read.option("basePath", f"{table.root}/{table.DATA_DIR}")
+        .parquet(*sorted(table.current_partition_paths(version).values()))
+        .drop("snap")
+    )
+    assert got.schema == want.schema
+    assert dict(got.dtypes)["day"] == "date"
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+    roots = table.scan_roots(version)
+    assert len(roots) == want_roots, roots
+    live = set(table.current_partition_paths(version).values())
+    # every root is a live partition dir or the dir of a snapshot that
+    # owns live partitions — never an orphan or superseded snapshot
+    assert all(
+        r in live or any(p.startswith(r + "/") for p in live) for r in roots
+    ), roots
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert re.search(r"InMemoryFileIndex\((\d+) paths\)", plan).group(1) == (
+        str(want_roots)
+    ), plan
+
+
+def test_manifest_snapshots_carry_forward_only_live_snapshots(spark, tmp_path):
+    """Each manifest records how many partition dirs every still-live
+    snapshot wrote; a fully superseded snapshot's entry is dropped."""
+    import json
+
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+
+    def recorded() -> dict:
+        v = table.current_version()
+        return json.loads(table._read_small_file(
+            table._jpath(table.MANIFEST_DIR, f"manifest-{v}.json")
+        ))["snapshots"]
+
+    _commit_days(spark, table, [1, 2, 3])
+    assert recorded() == {"1": 3}
+    _commit_days(spark, table, [3, 4])
+    assert recorded() == {"1": 3, "2": 2}
+    _commit_days(spark, table, [1, 2])
+    assert recorded() == {"2": 2, "3": 2}

@@ -317,6 +317,57 @@ def test_warehouse_export_jdbc_stub_invoked(spark, tmp_path):
     assert calls == [(7, "dim_seq")]
 
 
+def test_manifests_skip_non_numeric_batch_dirs(spark, tmp_path):
+    """A ``batch_*`` dir whose suffix is not a number (a loader's
+    ``batch_tmp`` staging dir) is not a batch: manifests() skips it, as
+    export's batch numbering does, instead of raising ValueError."""
+    from serverless_etl_aws_spark.pipeline.export import WarehouseExporter
+
+    exp = WarehouseExporter(str(tmp_path / "exports"))
+    m0 = exp.export(spark.range(3), "dim")
+    stray = tmp_path / "exports" / "dim" / "batch_tmp"
+    stray.mkdir()
+    (stray / "manifest.json").write_text("{}")
+    m1 = exp.export(spark.range(4), "dim")
+    assert m1.endswith(os.path.join("batch_1", "manifest.json"))
+    assert exp.manifests("dim") == [m0, m1]
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+@pytest.mark.parametrize("case", ["rows", "empty", "jdbc"])
+def test_export_row_count_equals_rows_read_back(spark, tmp_path, fmt, case):
+    """The manifest's ``row_count`` is counted on the export write (an
+    Observation), not by reading the files back; it must still equal
+    the rows a loader reads through the manifest, for both formats, an
+    empty frame, and an export that also pushes through ``jdbc_writer``."""
+    import json
+
+    from serverless_etl_aws_spark.pipeline.export import WarehouseExporter
+
+    df = (
+        spark.createDataFrame([], "id bigint, tag string")
+        if case == "empty"
+        else spark.range(0, 50, 1, 4).selectExpr(
+            "id", "CAST(id % 7 AS STRING) AS tag"
+        ).filter("id % 3 <> 0")
+    )
+    pushed = []
+    exp = WarehouseExporter(
+        str(tmp_path / "exports"),
+        fmt=fmt,
+        jdbc_writer=(
+            (lambda d, table: pushed.append(d.count())) if case == "jdbc"
+            else None
+        ),
+    )
+    manifest_path = exp.export(df, "t")
+    with open(manifest_path) as f:
+        row_count = json.load(f)["row_count"]
+    back = exp.read_batch(spark, manifest_path)
+    assert row_count == back.count() == (0 if case == "empty" else 33)
+    assert pushed == ([row_count] if case == "jdbc" else [])
+
+
 class TestWarehouseJdbc:
     def test_export_pushes_through_jdbc_writer(self, spark, tmp_path):
         """Completes the reference's declared warehouse milestone
