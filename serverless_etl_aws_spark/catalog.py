@@ -18,6 +18,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,9 +117,33 @@ def events_reader_setup(spark: SparkSession, path: str):
     return schemas.EVENTS, (lambda df: df)
 
 
-#: Footer column-name checks already performed this process, keyed by
-#: (path, mtime_ns) so an in-place fixture regeneration re-checks.
-_FOOTER_CHECKED: set = set()
+def content_stamp(path: str) -> tuple | None:
+    """What a memo keyed on ``path`` belongs to: one ``(abs path,
+    mtime_ns, size)`` triple for a file, or one per non-hidden file under
+    a directory (names starting with ``.`` or ``_`` skipped, as Spark
+    skips them), in walk order. ``None`` when there is nothing this
+    process can stat: a missing path, an object-store URI (``s3a://``),
+    or a directory with no member files.
+
+    Every per-process fixture memo keys on this, under one rule: no
+    stamp, no memo. Stamping each member, not the directory, matters: a
+    member rewritten in place under the same name leaves the directory's
+    own mtime and size unchanged."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((os.path.abspath(path), st.st_mtime_ns, st.st_size),)
+        members = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+            for f in sorted(files):
+                if not f.startswith((".", "_")):
+                    p = os.path.abspath(os.path.join(root, f))
+                    st = os.stat(p)
+                    members.append((p, st.st_mtime_ns, st.st_size))
+    except OSError:  # missing, or a member vanished mid-walk
+        return None
+    return tuple(members) or None
 
 
 def _check_footer_names(path: str, schema) -> None:
@@ -130,13 +155,8 @@ def _check_footer_names(path: str, schema) -> None:
     s3a handler driver-side) and single-file tables only — the fixtures'
     layout; declared-evolution reads (scan_merge_schema) go through their
     own explicit contract, not this loader."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return  # non-local or missing: let the Spark read surface it
-    key = (path, st.st_mtime_ns)
-    if key in _FOOTER_CHECKED or not os.path.isfile(path):
-        return
+    if not os.path.isfile(path):
+        return  # directory, non-local or missing: the Spark read decides
     import pyarrow.parquet as pq
 
     footer_names = set(pq.read_schema(path).names)
@@ -146,20 +166,20 @@ def _check_footer_names(path: str, schema) -> None:
             f"fixture drift: {path} no longer has column(s) {missing} "
             f"declared in schemas.py — a silent read would NULL-fill them"
         )
-    _FOOTER_CHECKED.add(key)
 
 
-#: Base-scan DataFrame memo, keyed (applicationId, path, mtime_ns, size,
-#: name). The cached object is the LAZY scan relation — no rows, no
-#: results; every execution still computes from the parquet files. What
-#: the memo removes is the per-call driver work of rebuilding an
-#: identical relation: schema ship + file listing + footer checks +
-#: eager re-analysis of the column-order projection (measured 23–46 ms
-#: per load_table call, 1–3 calls per registry key — a fixed per-key
-#: tax the scaling block showed no core count can touch). mtime_ns/size
-#: in the key invalidate on fixture regeneration; non-statable paths
-#: (object stores) skip the memo — a cluster's driver would hold its
-#: catalog's resolved relations the same way.
+#: Base-scan DataFrame memo, keyed (applicationId, name,
+#: :func:`content_stamp`). The cached object is the LAZY scan relation —
+#: no rows, no results; every execution still computes from the parquet
+#: files. What the memo removes is the per-call driver work of
+#: rebuilding an identical relation: schema ship + file listing + footer
+#: checks + eager re-analysis of the column-order projection (measured
+#: 23–46 ms per load_table call, 1–3 calls per registry key — a fixed
+#: per-key tax the scaling block showed no core count can touch). The
+#: stamp invalidates on any rewrite of the table's files, a directory
+#: member rewritten in place included; a path with no stamp (object
+#: stores) skips the memo — a cluster's driver would hold its catalog's
+#: resolved relations the same way.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -178,19 +198,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {sorted(schemas.TABLES)}")
     schema = schemas.TABLES[name]
     path = table_path(sf_dir, name)
-    ckey = None
-    try:
-        st = os.stat(path)
-        ckey = (
-            spark.sparkContext.applicationId,
-            os.path.abspath(path),
-            st.st_mtime_ns,
-            st.st_size,
-            name,
-        )
-    except OSError:
-        pass  # non-local/missing: uncached, let the read surface it
-    if ckey is not None and ckey in _TABLE_CACHE:
+    stamp = content_stamp(path)
+    ckey = (spark.sparkContext.applicationId, name, stamp)
+    if stamp is not None and ckey in _TABLE_CACHE:
         return _TABLE_CACHE[ckey]
     _check_footer_names(path, schema)
     if name == "events":
@@ -200,7 +210,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = spark.read.schema(schema).parquet(path)
         df = df.select(*[f.name for f in schema.fields])
-    if ckey is not None:
+    if stamp is not None:
         _TABLE_CACHE[ckey] = df
     return df
 

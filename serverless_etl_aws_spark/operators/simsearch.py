@@ -19,10 +19,10 @@ ranking with a vec_id tiebreak so top-k boundaries are engine-stable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..catalog import content_stamp
 
 # Sequential left-fold dot product / norm over array<double> columns —
 # bit-identical to DuckDB's list_sum(list_transform(...)) evaluation order.
@@ -226,29 +226,18 @@ def clear_centroid_cache() -> None:
     _CENTROID_CACHE.clear()
 
 
-def corpus_cache_key(path: str, label: str = "") -> str:
+def corpus_cache_key(path: str, label: str = "") -> str | None:
     """Build a ``corpus_key`` bound to the on-disk corpus CONTENT, not
-    just its path: the parquet file's (mtime_ns, size) — every member's,
-    for a directory — is folded in, so regenerating a fixture in place
-    retrains the quantizer instead of silently serving stale centroids
-    (a long-lived bench/pytest process would otherwise never notice).
-    Local filesystems only; an object-store deployment would fold in the
-    listing's ETags the same way."""
-    parts = [label or path]
-    if os.path.isdir(path):
-        # Recursive: a Hive-partitioned corpus keeps its data files in
-        # subdirectories — a top-level-only listing would produce a
-        # content-free key and defeat the invalidation this exists for.
-        for root, dirs, files in sorted(os.walk(path)):
-            for m in sorted(files):
-                if m.endswith(".parquet") and not m.startswith((".", "_")):
-                    st = os.stat(os.path.join(root, m))
-                    rel = os.path.relpath(os.path.join(root, m), path)
-                    parts.append(f"{rel}:{st.st_mtime_ns}:{st.st_size}")
-    else:
-        st = os.stat(path)
-        parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-    return "|".join(parts)
+    just its path: the corpus's :func:`catalog.content_stamp` (every
+    member file's, for a directory, Hive-partitioned subdirectories
+    included) is folded in, so regenerating a fixture in place retrains
+    the quantizer instead of silently serving stale centroids (a
+    long-lived bench/pytest process would otherwise never notice).
+    ``None`` when the path has no stamp (missing, or an object store:
+    a deployment there would fold in the listing's ETags) — the index
+    callers then train uncached."""
+    stamp = content_stamp(path)
+    return None if stamp is None else repr((label or path, stamp))
 
 
 def ivf_topk(

@@ -23,6 +23,7 @@ import json
 import os
 
 from .archive import archive_file
+from .ingest import seen_source_files
 
 
 class ActionDispatcher:
@@ -36,7 +37,7 @@ class ActionDispatcher:
         """Reference: S3FileProcessor.get_unprocessed_files
         (s3_operations.py:13-38) — tag-predicate listing becomes a diff of
         the bronze listing against the checkpoint's seen-files log."""
-        seen = self._seen_paths()
+        seen = seen_source_files(self.checkpoint_dir)
         out = []
         for root, _dirs, files in os.walk(self.bronze_dir):
             for fn in files:
@@ -50,30 +51,6 @@ class ActionDispatcher:
     def archive(self, path: str) -> str:
         """Reference: archive_file (s3_operations.py:58-72)."""
         return archive_file(path, self.archive_root)
-
-    def _seen_paths(self) -> set[str]:
-        src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
-        seen: set[str] = set()
-        if not os.path.isdir(src_dir):
-            return seen
-        for log in os.listdir(src_dir):
-            p = os.path.join(src_dir, log)
-            if not os.path.isfile(p) or log.startswith("."):
-                continue
-            with open(p, errors="ignore") as f:
-                for line in f:
-                    line = line.strip()
-                    if line.startswith("{"):
-                        try:
-                            entry = json.loads(line)
-                        except json.JSONDecodeError:
-                            continue
-                        path = entry.get("path", "")
-                        if path.startswith("file:"):
-                            path = path[len("file:"):]
-                        if path:
-                            seen.add(os.path.abspath(path))
-        return seen
 
     # -- protocol ----------------------------------------------------------
     def handle(self, event: dict) -> dict:

@@ -336,11 +336,12 @@ class AtomicPartitionedTable:
 
     def _manifest(
         self, version: int | None = None
-    ) -> tuple[dict[str, int], dict[int, int] | None]:
+    ) -> tuple[dict[str, int], dict[int, int]]:
         """Partition-dir-name → owning-snapshot mapping for ``version``
         (default: current), and snapshot → partition dirs it wrote for
-        every live snapshot (``None`` for a manifest written before that
-        field existed). Empty table → empty mappings."""
+        every live snapshot (empty for a manifest written before that
+        field existed: none of its snapshots reads as whole). Empty
+        table → empty mappings."""
         v = self.current_version() if version is None else version
         if v == 0:
             return {}, {}
@@ -356,9 +357,8 @@ class AtomicPartitionedTable:
         )
         doc = json.loads(text)
         mapping = {str(k): int(s) for k, s in doc["partitions"].items()}
-        if "snapshots" not in doc:
-            return mapping, None
-        return mapping, {int(s): int(k) for s, k in doc["snapshots"].items()}
+        wrote = {int(s): int(k) for s, k in doc.get("snapshots", {}).items()}
+        return mapping, wrote
 
     def current_partition_paths(
         self, version: int | None = None
@@ -380,10 +380,7 @@ class AtomicPartitionedTable:
         mapping, wrote = self._manifest(version)
         live = Counter(mapping.values())
         data = f"{self.root}/{self.DATA_DIR}"
-        whole = {
-            snap for snap, n in live.items()
-            if wrote is not None and wrote.get(snap) == n
-        }
+        whole = {snap for snap, n in live.items() if wrote.get(snap) == n}
         return sorted(
             [f"{data}/snap={snap}" for snap in whole]
             + [
@@ -591,7 +588,7 @@ class AtomicPartitionedTable:
                     mapping.pop(self.partition_dir_name(value), None)
             for name in written:
                 mapping[name] = snap
-            wrote = {**(wrote or {}), snap: len(written)}
+            wrote = {**wrote, snap: len(written)}
             live = set(mapping.values())
             version = base_version + 1
             manifest = {

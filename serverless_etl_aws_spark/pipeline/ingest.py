@@ -50,6 +50,46 @@ from .report import RunReport
 _TOUCHED_OBS_CAP = 10_000
 
 
+def seen_source_files(checkpoint_dir: str) -> set[str]:
+    """Absolute paths of every file the streaming file source recorded
+    in ``<checkpoint>/sources/0`` (the engine's replacement for the
+    reference's tag-based bookkeeping). :class:`IncrementalIngest`
+    counts it; ``ActionDispatcher.get_unprocessed`` diffs bronze against
+    it.
+
+    The log is a Spark-internal format: one JSON entry per line, and
+    every 10 batches a ``.compact`` file that REPEATS all prior entries —
+    hence the set. Per-batch ``inputFiles()`` cannot replace this read:
+    ``foreachBatch`` hands each micro-batch over as a ``LogicalRDD``,
+    whose ``inputFiles()`` is always empty. Local-filesystem checkpoints
+    only (``os.listdir``); for object-store checkpoints this would need
+    the Hadoop FS API — ingest correctness itself never depends on it."""
+    src_dir = os.path.join(checkpoint_dir, "sources", "0")
+    seen: set[str] = set()
+    if not os.path.isdir(src_dir):
+        return seen
+    import json
+
+    for log in os.listdir(src_dir):
+        p = os.path.join(src_dir, log)
+        if not os.path.isfile(p) or log.startswith("."):
+            continue
+        with open(p, errors="ignore") as f:
+            for line in f:
+                line = line.strip()
+                if not line.startswith("{"):
+                    continue
+                try:
+                    path = json.loads(line).get("path", "")
+                except json.JSONDecodeError:
+                    continue
+                if path.startswith("file:"):
+                    path = path[len("file:"):]
+                if path:
+                    seen.add(os.path.abspath(path))
+    return seen
+
+
 @dataclass
 class IngestResult:
     files_processed: int
@@ -182,23 +222,16 @@ class IncrementalIngest:
             # per-dir file counts (without it, a partition value spanning
             # several source splits is written by several tasks); the
             # dynamic-overwrite replay stays idempotent either way — the
-            # whole dir is replaced per batch (ADVICE r14). Gate order:
-            # the file count is free driver-side metadata; only a
-            # few-files batch pays the physical-planning cost of an exact
-            # .rdd partition count (a single LARGE file still splits into
-            # many scan partitions, which the exact check honors).
+            # whole dir is replaced per batch (ADVICE r14). The gate is
+            # the batch's exact scan-partition count (a single LARGE file
+            # still splits into many scan partitions, which it honors).
             parallelism = self.spark.sparkContext.defaultParallelism
-            if self.partition_by:
-                try:
-                    n_files = len(staged.inputFiles())
-                except Exception:
-                    n_files = 0
-                if n_files < parallelism and (
-                    staged.rdd.getNumPartitions() < parallelism
-                ):
-                    staged = staged.repartition(
-                        parallelism, F.col(self.partition_by)
-                    )
+            if self.partition_by and (
+                staged.rdd.getNumPartitions() < parallelism
+            ):
+                staged = staged.repartition(
+                    parallelism, F.col(self.partition_by)
+                )
             out = (
                 staged.observe(obs, *metrics)
                 .write.mode("overwrite")
@@ -229,7 +262,7 @@ class IncrementalIngest:
             counts["rows"] += int(obs.get["rows"])
             counts["batches"] += 1
 
-        before = self._seen_files()
+        before = seen_source_files(self.checkpoint_dir)
         query = (
             stream.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", self.checkpoint_dir)
@@ -244,41 +277,9 @@ class IncrementalIngest:
                 "ingest FAILED", f"bronze={self.bronze_dir}"
             )
             raise
-        counts["files"] = self._seen_files() - before
+        counts["files"] = len(seen_source_files(self.checkpoint_dir) - before)
         self.reporter.notify(
             "ingest ok",
             f"files={counts['files']} rows={counts['rows']} batches={counts['batches']}",
         )
         return IngestResult(counts["files"], counts["rows"], counts["batches"])
-
-    def _seen_files(self) -> int:
-        """Count DISTINCT files recorded in the checkpoint's file-source
-        log (the engine's replacement for tag-based bookkeeping).
-
-        Paths are deduped into a set because Spark compacts the log every
-        10 batches into ``.compact`` files that REPEAT all prior entries —
-        naive line counting over-counts after compaction. Local-filesystem
-        checkpoints only (``os.listdir``); for object-store checkpoints
-        this reporting hook would need the Hadoop FS API — ingest
-        correctness itself never depends on this count."""
-        src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
-        if not os.path.isdir(src_dir):
-            return 0
-        import json
-
-        seen: set[str] = set()
-        for log in os.listdir(src_dir):
-            path = os.path.join(src_dir, log)
-            if not os.path.isfile(path) or log.startswith("."):
-                continue
-            with open(path, errors="ignore") as f:
-                for line in f:
-                    line = line.strip()
-                    if line.startswith("{"):
-                        try:
-                            entry = json.loads(line)
-                        except json.JSONDecodeError:
-                            continue
-                        if "path" in entry:
-                            seen.add(entry["path"])
-        return len(seen)

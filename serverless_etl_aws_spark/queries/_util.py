@@ -48,9 +48,10 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return catalog.load_table(spark, sf_dir, name)
 
 
-#: Row-group counts per fixture file, keyed (path, mtime_ns) — the
-#: splittability gate behind :func:`spread` (a parquet scan task cannot
-#: split a row group, so row groups bound a file's scan parallelism).
+#: Row-group counts per fixture table, keyed on its
+#: :func:`catalog.content_stamp` — the splittability gate behind
+#: :func:`spread` (a parquet scan task cannot split a row group, so row
+#: groups bound a file's scan parallelism).
 _ROW_GROUP_CACHE: dict[tuple, int] = {}
 
 
@@ -58,37 +59,27 @@ def natural_scan_tasks(sf_dir: str, name: str) -> int:
     """Upper bound on the scan parallelism the fixture layout allows for
     table ``name``: total parquet row groups across its member files
     (each row group is read by exactly one task — Spark cannot split
-    one). Driver-side footer metadata only (cached per path+mtime); a
-    non-local path returns a large sentinel — cluster tables are
-    many-row-group by construction and the caller's gate must read
-    "already parallel enough" there."""
-    path = catalog.table_path(sf_dir, name)
-    if "://" in path and not path.startswith("file://"):
+    one). Driver-side footer metadata only (cached per content stamp);
+    a path with no stamp (non-local, missing) returns a large sentinel —
+    cluster tables are many-row-group by construction and the caller's
+    gate must read "already parallel enough" there."""
+    stamp = catalog.content_stamp(catalog.table_path(sf_dir, name))
+    if stamp is None:
         return 1 << 20
-    try:
-        st = os.stat(path)
-    except OSError:
-        return 1 << 20
-    key = (path, st.st_mtime_ns)
-    hit = _ROW_GROUP_CACHE.get(key)
+    hit = _ROW_GROUP_CACHE.get(stamp)
     if hit is not None:
         return hit
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        n = 0
-        for root, dirs, files in os.walk(path):
-            for fname in files:
-                if fname.endswith(".parquet") and not fname.startswith(
-                    (".", "_")
-                ):
-                    n += pq.ParquetFile(
-                        os.path.join(root, fname)
-                    ).metadata.num_row_groups
-    else:
-        n = pq.ParquetFile(path).metadata.num_row_groups
-    n = max(1, n)
-    _ROW_GROUP_CACHE[key] = n
+    n = max(
+        1,
+        sum(
+            pq.ParquetFile(p).metadata.num_row_groups
+            for p, _mtime, _size in stamp
+            if p.endswith(".parquet")
+        ),
+    )
+    _ROW_GROUP_CACHE[stamp] = n
     return n
 
 
@@ -176,14 +167,14 @@ def sql_vec_finite(expr: str = "embedding") -> str:
     )
 
 
-#: Modal-dim cache: (sorted source files + mtime_ns/size, col) → mode.
+#: Modal-dim cache: (plan fingerprint + source-file stamps, col) → mode.
 #: vec_dim_mode is an EAGER O(1)-result job; without the cache every
 #: embedding key re-scans the corpus once per DataFrame CONSTRUCTION
 #: (including plan/explain-only paths — ADVICE r12). The key is bound to
-#: the on-disk content (same discipline as simsearch.corpus_cache_key),
+#: the on-disk content (:func:`catalog.content_stamp`, as every memo),
 #: so a regenerated fixture invalidates it; DataFrames with no file
 #: lineage (createDataFrame in tests) or non-local URIs skip the cache.
-_DIM_MODE_CACHE: dict[tuple[str, str], int | None] = {}
+_DIM_MODE_CACHE: dict[tuple[tuple, str], int | None] = {}
 
 
 def clear_dim_mode_cache() -> None:
@@ -191,11 +182,11 @@ def clear_dim_mode_cache() -> None:
     _DIM_MODE_CACHE.clear()
 
 
-def _content_key(emb: DataFrame) -> str | None:
+def _content_key(emb: DataFrame) -> tuple | None:
     """Content-bound cache key for a file-backed DataFrame: the analyzed
-    plan's semantic fingerprint plus its source files' (path, mtime_ns,
-    size), or None when the lineage has no local files (in-memory test
-    frames, non-file URIs) — those stay uncached.
+    plan's semantic fingerprint plus each source file's
+    :func:`catalog.content_stamp`, or None when the lineage has no local
+    files (in-memory test frames, non-file URIs) — those stay uncached.
 
     The plan fingerprint keeps two DIFFERENT relations over the same
     files apart (a filtered subset must not poison the raw table's
@@ -211,7 +202,7 @@ def _content_key(emb: DataFrame) -> str | None:
         plan_fp = str(emb._jdf.queryExecution().analyzed().semanticHash())
     except Exception:  # pragma: no cover — fail safe: uncached
         return None
-    parts = [plan_fp]
+    key = [plan_fp]
     for uri in files:
         # file://HOST/path (authority form) is NOT a local path this
         # process can stat — urlparse keeps the host separate instead of
@@ -219,13 +210,11 @@ def _content_key(emb: DataFrame) -> str | None:
         parsed = urllib.parse.urlparse(uri)
         if parsed.scheme != "file" or parsed.netloc not in ("", "localhost"):
             return None
-        p = urllib.parse.unquote(parsed.path)
-        try:
-            st = os.stat(p)
-        except OSError:
+        stamp = catalog.content_stamp(urllib.parse.unquote(parsed.path))
+        if stamp is None:
             return None
-        parts.append(f"{p}:{st.st_mtime_ns}:{st.st_size}")
-    return "|".join(parts)
+        key.extend(stamp)
+    return tuple(key)
 
 
 def vec_dim_mode(emb: DataFrame, col: str = "embedding") -> int | None:
@@ -519,15 +508,34 @@ def nation_trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_degree_dist both consume the co-order part adjacency, and
 # graph_jaccard re-derives the supplier-part bipartite edges on every
 # call — each rebuild is a full lineitem self-join/distinct. Memoizing
-# the MATERIALIZED relation per (applicationId, sf_dir) follows the BPE
-# merge-engine pattern (extras9._BPE_CACHE): one FileScan + one
-# distinct-shuffle per session for the whole family, and warm bench runs
-# start from the checkpoint instead of re-deriving edges. Keyed by
-# applicationId so a restarted session can never see another JVM's
-# checkpointed RDDs. 100 TB posture: this IS the "materialized shared
-# edge relation" a production graph tier maintains as a table; the
-# session memo is its single-job equivalent.
+# the MATERIALIZED relation per (applicationId, lineitem content stamp)
+# follows the BPE merge-engine pattern (extras9._BPE_CACHE): one
+# FileScan + one distinct-shuffle per session for the whole family, and
+# warm bench runs start from the checkpoint instead of re-deriving
+# edges. Keyed by applicationId so a restarted session can never see
+# another JVM's checkpointed RDDs, and on catalog.content_stamp so a
+# rewritten lineitem rebuilds (no stamp, no memo). 100 TB posture: this
+# IS the "materialized shared edge relation" a production graph tier
+# maintains as a table; the session memo is its single-job equivalent.
 _GRAPH_EDGE_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _memo_edges(
+    spark: SparkSession, sf_dir: str, kind: str, plan
+) -> DataFrame:
+    """Get-or-build for the edge relations below: ``plan()`` materialized
+    once per session + lineitem content (see :data:`_GRAPH_EDGE_CACHE`)."""
+    stamp = catalog.content_stamp(catalog.table_path(sf_dir, "lineitem"))
+    key = (spark.sparkContext.applicationId, kind, stamp)
+    hit = _GRAPH_EDGE_CACHE.get(key)
+    if hit is not None:
+        return hit
+    from ..operators.graph import materialize
+
+    edges = materialize(plan())
+    if stamp is not None:
+        _GRAPH_EDGE_CACHE[key] = edges
+    return edges
 
 
 def co_order_part_adj_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -555,15 +563,10 @@ def co_order_part_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage-truncated via operators.graph.materialize (which honors the
     reliable-checkpoint opt-in — the cluster posture for state that
     outlives one stage)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "co_order_part")
-    hit = _GRAPH_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..operators.graph import materialize
-
-    adj = materialize(co_order_part_adj_plan(spark, sf_dir))
-    _GRAPH_EDGE_CACHE[key] = adj
-    return adj
+    return _memo_edges(
+        spark, sf_dir, "co_order_part",
+        lambda: co_order_part_adj_plan(spark, sf_dir),
+    )
 
 
 def order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,35 +575,21 @@ def order_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ml_assoc_rules). Unlike :func:`co_order_part_adj` this KEEPS the
     order key (pair support needs per-order counting, the adjacency's
     global distinct loses it). Same memo/materialize contract."""
-    key = (spark.sparkContext.applicationId, sf_dir, "order_part")
-    hit = _GRAPH_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..operators.graph import materialize
-
-    edges = materialize(
-        t(spark, sf_dir, "lineitem")
+    return _memo_edges(
+        spark, sf_dir, "order_part",
+        lambda: t(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
-        .distinct()
+        .distinct(),
     )
-    _GRAPH_EDGE_CACHE[key] = edges
-    return edges
 
 
 def supplier_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct ``(l_suppkey, l_partkey)`` bipartite edges of the supply
     graph — graph_jaccard's posting lists. Same memo/materialize
     contract as :func:`co_order_part_adj`."""
-    key = (spark.sparkContext.applicationId, sf_dir, "supplier_part")
-    hit = _GRAPH_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from ..operators.graph import materialize
-
-    edges = materialize(
-        t(spark, sf_dir, "lineitem")
+    return _memo_edges(
+        spark, sf_dir, "supplier_part",
+        lambda: t(spark, sf_dir, "lineitem")
         .select("l_suppkey", "l_partkey")
-        .distinct()
+        .distinct(),
     )
-    _GRAPH_EDGE_CACHE[key] = edges
-    return edges

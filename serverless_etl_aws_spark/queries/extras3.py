@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import content_stamp, table_path
 from ..operators.simsearch import SQL_COSINE, cosine_expr, quant6
 from ..operators.text import SQL_FINGERPRINT, fingerprint
 from . import Query
@@ -124,30 +125,25 @@ def maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per process per FIXTURE CONTENT — the fragmented table is this
     # key's INPUT (the thing a fleet of stream writers produced), not
     # the compaction under measurement, and rebuilding it every run
-    # only re-times the fixture writer. The staging dir name carries
-    # (path, mtime_ns, size) of the source fixture, the same
-    # content-key discipline as _util._ROW_GROUP_CACHE, so a different
-    # sf_dir (or a regenerated fixture) in the same process stages its
-    # own copy; the _SUCCESS gate keeps a half-written staging from a
-    # killed run from being read as input.
-    src_path = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        st = os.stat(src_path)
+    # only re-times the fixture writer. The staging dir name carries a
+    # digest of the source fixture's catalog.content_stamp, the key of
+    # every fixture memo, so a different sf_dir (or a regenerated
+    # fixture) in the same process stages its own copy; the _SUCCESS
+    # gate keeps a half-written staging from a killed run from being
+    # read as input.
+    stamp = content_stamp(table_path(sf_dir, "lineitem"))
+    if stamp is None:  # unstatable source: stage fresh, never share
+        import uuid
+
+        ckey = uuid.uuid4().hex
+    else:
         # Stable digest, NOT builtin hash(): str hashing is salted per
         # process (PYTHONHASHSEED), which made the "same content" key
         # differ every run — each process staged a fresh 64-file copy
         # and stale ones accumulated unboundedly (ADVICE r14).
         import hashlib
 
-        ckey = hashlib.sha256(
-            repr(
-                (os.path.abspath(src_path), st.st_mtime_ns, st.st_size)
-            ).encode()
-        ).hexdigest()[:16]
-    except OSError:  # unstatable source: stage fresh, never share
-        import uuid
-
-        ckey = uuid.uuid4().hex
+        ckey = hashlib.sha256(repr(stamp).encode()).hexdigest()[:16]
     frag_dir = os.path.join(base, f"fragmented_{ckey}")
     if not os.path.exists(os.path.join(frag_dir, "_SUCCESS")):
         # Prune staging copies whose key no longer matches the current

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import content_stamp, table_path
 from . import Query
 from ._util import vec_finite, t
 
@@ -251,12 +252,14 @@ def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session-level result cache for the shared merge engine (VERDICT r5 #6):
 # llm_bpe_train and llm_bpe_encode deliberately share _bpe_run so train
 # and apply can never drift — but without a cache each key re-runs the
-# full 3-iteration train. Caching the RESULT per (session, sf_dir, iters)
-# keeps the single-implementation guarantee (one engine, memoized) while
-# letting encode reuse train's materialized sequence: the returned
-# DataFrames sit on localCheckpoints, so after their first action the
-# lineage is truncated and replays are cheap. Keyed by applicationId so a
-# restarted session can never see another JVM's checkpointed RDDs.
+# full 3-iteration train. Caching the RESULT per (session, documents
+# content stamp, iters) keeps the single-implementation guarantee (one
+# engine, memoized) while letting encode reuse train's materialized
+# sequence: the returned DataFrames sit on localCheckpoints, so after
+# their first action the lineage is truncated and replays are cheap.
+# Keyed by applicationId so a restarted session can never see another
+# JVM's checkpointed RDDs, and on catalog.content_stamp so a rewritten
+# corpus retrains (no stamp, no memo).
 _BPE_CACHE: dict[tuple, tuple] = {}
 
 
@@ -267,7 +270,8 @@ def _bpe_run(spark: SparkSession, sf_dir: str):
     apply share one implementation, so the learned merges and the encoded
     corpus can never drift apart. Memoized per session+corpus (see
     _BPE_CACHE above)."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir, BPE_ITERS)
+    stamp = content_stamp(table_path(sf_dir, "documents"))
+    cache_key = (spark.sparkContext.applicationId, stamp, BPE_ITERS)
     hit = _BPE_CACHE.get(cache_key)
     if hit is not None:
         return hit
@@ -337,7 +341,8 @@ def _bpe_run(spark: SparkSession, sf_dir: str):
         rows.append((it, a, b, int(c), int(n_merges), int(n_tokens)))
         seq = rebuilt
 
-    _BPE_CACHE[cache_key] = (rows, seq)
+    if stamp is not None:
+        _BPE_CACHE[cache_key] = (rows, seq)
     return rows, seq
 
 

@@ -638,7 +638,7 @@ def llm_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16, nprobe=12,
         # index-per-corpus: the coarse quantizer is a persisted artifact,
         # trained once per fixture dir, not once per probe. The key folds
-        # in the file's mtime/size fingerprint so an in-place fixture
+        # in the file's content stamp so an in-place fixture
         # regeneration retrains instead of serving stale centroids.
         corpus_key=corpus_cache_key(
             os.path.join(sf_dir, "embeddings.parquet"),

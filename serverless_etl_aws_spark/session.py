@@ -57,11 +57,9 @@ def get_spark(
         # 3-task stage). 64 KiB keeps such stages at the session's
         # parallelism; stages with ≥ cores×1 MiB of shuffle — every
         # at-scale stage that matters — are unaffected because
-        # parallelismFirst sizing already spreads them. Env-tunable for
-        # clusters that prefer the stock floor.
+        # parallelismFirst sizing already spreads them.
         .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
@@ -89,12 +87,11 @@ def get_spark(
         # stream_late_data 2.00→1.68, stream_session 1.35→1.19,
         # stream_tumbling 0.90→0.81, stream_stateful neutral (7-run
         # medians) — and at scale per-commit cost stops growing with
-        # state size, which is the production argument. Env-tunable for
-        # clusters that prefer full-snapshot commits.
+        # state size, which is the production argument.
         .config(
             "spark.sql.streaming.stateStore.rocksdb."
             "changelogCheckpointing.enabled",
-            os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"),
+            "true",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python UDTFs run row-at-a-time (BatchEvalPythonUDTF, pickled
@@ -166,8 +163,7 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # same coalesce floor as get_spark (see comment there): without
         # it CPU-heavy small-shuffle stages serialize onto 1-3 cores
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         # Stateful streaming state lives OFF-HEAP in native RocksDB
@@ -186,8 +182,7 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
         # same changelog-checkpointing posture as get_spark (see comment
         # there): commit the per-batch change set, snapshot in background
         "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled":
-            os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"),
+        "changelogCheckpointing.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",

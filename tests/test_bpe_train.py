@@ -98,9 +98,8 @@ def test_bpe_parallel_merge_equals_sequential_on_runs(docs, bpe_spark):
     orig_t = util.t
     try:
         # point the key at the synthetic corpus; the session-level merge
-        # cache keys on (session, sf_dir) — swapping the corpus behind a
-        # fixed sf_dir requires dropping it (production code never does
-        # this; the monkeypatch does, once per hypothesis example)
+        # cache keys on the documents table's content stamp, which the
+        # "ignored" sf_dir has none of, so nothing is memoized here
         e9._BPE_CACHE.clear()
         e9.t = lambda s, sf, name: df
         got = [

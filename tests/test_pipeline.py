@@ -128,6 +128,43 @@ class TestExactlyOnce:
         total = spark.read.parquet(str(tmp_path / "silver")).count()
         assert total == r1.rows_ingested + r2.rows_ingested
 
+    def test_files_processed_counts_new_files(self, spark, sf_dir, tmp_path):
+        """files_processed is the growth of the checkpoint's file-source
+        log: every new file once, a replay none, however many batches
+        the files arrive in."""
+        import shutil
+
+        from serverless_etl_aws_spark.catalog import events_reader_setup
+        from serverless_etl_aws_spark.pipeline.ingest import IncrementalIngest
+
+        bronze = tmp_path / "bronze"
+        bronze.mkdir()
+        src = os.path.join(sf_dir, "events.parquet")
+        shutil.copy(src, bronze / "f1.parquet")
+        shutil.copy(src, bronze / "f2.parquet")
+        read_schema, normalize_ts = events_reader_setup(spark, str(bronze))
+
+        def pipe(name, **kw):
+            return IncrementalIngest(
+                spark,
+                bronze_dir=str(bronze),
+                silver_dir=str(tmp_path / f"silver_{name}"),
+                checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+                schema=read_schema,
+                transform=normalize_ts,
+                **kw,
+            )
+
+        whole = pipe("whole")
+        r1 = whole.run_once()
+        assert (r1.files_processed, r1.batches) == (2, 1)
+        r2 = whole.run_once()
+        assert (r2.files_processed, r2.rows_ingested) == (0, 0)
+
+        r3 = pipe("one_per_trigger", max_files_per_trigger=1).run_once()
+        assert (r3.files_processed, r3.batches) == (2, 2)
+        assert r3.rows_ingested == r1.rows_ingested
+
 
 class TestIdempotentReplay:
     def test_batch_replay_does_not_double_append(self, spark, sf_dir, tmp_path):
