@@ -63,8 +63,8 @@ def main(argv: list[str] | None = None) -> int:
         help="show the physical plan of a registry key or SQL",
         description=(
             "Show the physical plan of a registry key or SQL string. "
-            "Some keys (streaming runs, atomic-table maintenance, "
-            "staged scans — see queries.EAGER_KEYS) execute real work "
+            "Keys declared Query.build='side_effects' (streaming runs, "
+            "atomic-table maintenance, staged scans) execute real work "
             "at DataFrame-build time; explaining them RUNS them, so "
             "they are refused without --allow-side-effects."
         ),

@@ -65,19 +65,21 @@ class Engine:
         plan text so callers can assert on it (the same string
         tests/test_plans.py pins).
 
-        Keys in :data:`queries.EAGER_KEYS` execute real work at
-        DataFrame-build time (streaming runs, commit/vacuum cycles,
-        scratch staging, an embedded Derby write) — explaining them means
-        RUNNING them. They are refused unless ``allow_side_effects=True``
-        so "show me the plan" can never silently execute a pipeline.
-        Keys in :data:`queries.COMPUTE_EAGER_KEYS` also compute at build
-        time (iterative loops, eager checkpoints, bounded collects) but
-        mutate nothing — they are allowed, just not instant."""
-        from .queries import EAGER_KEYS, build_registry
+        A key declared ``Query.build == "side_effects"`` executes real
+        work at DataFrame-build time (streaming runs, commit/vacuum
+        cycles, scratch staging, an embedded Derby write) — explaining it
+        means RUNNING it. Such keys are refused unless
+        ``allow_side_effects=True``, so "show me the plan" can never
+        silently execute a pipeline. ``build == "compute"`` keys also run
+        jobs at build time (iterative loops, eager checkpoints, bounded
+        collects) but mutate nothing — they are allowed, just not
+        instant."""
+        from .queries import build_registry
 
         registry = build_registry()
         if query in registry:
-            if query in EAGER_KEYS and not allow_side_effects:
+            if (registry[query].build == "side_effects"
+                    and not allow_side_effects):
                 raise ValueError(
                     f"registry key {query!r} executes real work at "
                     f"DataFrame-build time (staging/streaming/commits); "

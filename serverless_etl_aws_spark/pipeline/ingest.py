@@ -29,6 +29,7 @@ and sized with ``maxRecordsPerFile`` toward ~128 MB files.
 from __future__ import annotations
 
 import os
+import urllib.parse
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,8 +84,9 @@ def seen_source_files(checkpoint_dir: str) -> set[str]:
                     path = json.loads(line).get("path", "")
                 except json.JSONDecodeError:
                     continue
-                if path.startswith("file:"):
-                    path = path[len("file:"):]
+                # the log holds URIs: a space or ``%`` in a name is
+                # percent-encoded there
+                path = urllib.parse.unquote(urllib.parse.urlparse(path).path)
                 if path:
                     seen.add(os.path.abspath(path))
     return seen

@@ -410,8 +410,14 @@ GROUP BY c_mktsegment
 
 
 QUERIES: dict[str, Query] = {
-    "scan_csv": Query(scan_csv, SCAN_CSV_SQL, "CSV source roundtrip"),
-    "scan_json": Query(scan_json, SCAN_JSON_SQL, "JSON-lines source roundtrip"),
+    "scan_csv": Query(
+        scan_csv, SCAN_CSV_SQL, "CSV source roundtrip",
+        build="side_effects",
+    ),
+    "scan_json": Query(
+        scan_json, SCAN_JSON_SQL, "JSON-lines source roundtrip",
+        build="side_effects",
+    ),
     "agg_percentile": Query(agg_percentile, AGG_PERCENTILE_SQL,
                             "exact interpolated percentiles"),
     "agg_pivot": Query(agg_pivot, AGG_PIVOT_SQL, "pivot to columns"),
@@ -429,5 +435,5 @@ QUERIES: dict[str, Query] = {
     "join_salted": Query(join_salted, JOIN_SALTED_SQL,
                          "salt-spread skew join"),
     "join_bucketed": Query(join_bucketed, JOIN_BUCKETED_SQL,
-                           "bucketed shuffle-free join"),
+                           "bucketed shuffle-free join", build="side_effects"),
 }

@@ -297,7 +297,8 @@ QUERIES: dict[str, Query] = {
         "add_months/last_day/quarter/ISO dow/ISO week"),
     "graph_label_propagation": Query(
         graph_label_propagation, GRAPH_LPA_SQL,
-        "weighted label propagation, integer-exact 3 iterations"),
+        "weighted label propagation, integer-exact 3 iterations",
+        build="compute"),
     "dim_snapshot_diff": Query(
         dim_snapshot_diff, DIM_SNAPSHOT_DIFF_SQL,
         "two-snapshot diff: added/deleted/changed, O(changes) output"),

@@ -506,4 +506,5 @@ WHERE o_orderkey % {JDBC_SAMPLE_MOD} = 0
 QUERIES["scan_jdbc"] = Query(
     scan_jdbc, SCAN_JDBC_SQL,
     "JDBC sink+source round-trip (embedded Derby, range-partitioned read)",
+    build="side_effects",
 )

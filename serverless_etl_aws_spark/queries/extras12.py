@@ -230,6 +230,7 @@ QUERIES: dict[str, Query] = {
     "scan_atomic_table": Query(
         scan_atomic_table, SCAN_ATOMIC_TABLE_SQL,
         "manifest-pointer snapshot table: commit/crash/refresh/vacuum/read",
+        build="side_effects",
     ),
     "fn_try_cast": Query(
         fn_try_cast, FN_TRY_CAST_SQL,
@@ -392,4 +393,5 @@ WHERE NOT (user_id % {DELETE_USER_MOD} = 0)
 QUERIES["maintenance_delete_rows"] = Query(
     maintenance_delete_rows, MAINTENANCE_DELETE_ROWS_SQL,
     "GDPR-style row erasure: partition-scoped rewrite, crash-atomic",
+    build="side_effects",
 )

@@ -536,6 +536,7 @@ QUERIES: dict[str, Query] = {
     "llm_dedup_apply": Query(
         llm_dedup_apply, LLM_DEDUP_APPLY_SQL,
         "dedup application: one canonical survivor per dup cluster",
+        build="compute",
     ),
     "join_lateral": Query(
         join_lateral, JOIN_LATERAL_SQL,
@@ -739,6 +740,7 @@ FROM walk WHERE node IS NOT NULL GROUP BY node
 QUERIES["graph_bfs"] = Query(
     graph_bfs, GRAPH_BFS_SQL,
     "BFS shortest hops over the co-order part graph (frontier rounds)",
+    build="compute",
 )
 
 

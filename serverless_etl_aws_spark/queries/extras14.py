@@ -301,5 +301,6 @@ QUERIES: dict[str, Query] = {
     "ts_seasonal": Query(
         ts_seasonal, TS_SEASONAL_SQL,
         "day-of-week seasonal profile + index from exact decimal moments",
+        build="compute",
     ),
 }

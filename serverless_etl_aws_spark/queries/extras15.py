@@ -466,6 +466,7 @@ QUERIES: dict[str, Query] = {
     "ml_naive_bayes": Query(
         ml_naive_bayes, ML_NAIVE_BAYES_SQL,
         "multinomial NB trainer: Laplace-smoothed integer-count model",
+        build="compute",
     ),
     "llm_collocations": Query(
         llm_collocations, LLM_COLLOCATIONS_SQL,

@@ -384,5 +384,6 @@ QUERIES: dict[str, Query] = {
     "graph_degree_dist": Query(
         graph_degree_dist, GRAPH_DEGREE_DIST_SQL,
         "degree histogram of the co-order part graph",
+        build="compute",
     ),
 }

@@ -481,5 +481,6 @@ QUERIES: dict[str, Query] = {
     "graph_jaccard": Query(
         graph_jaccard, GRAPH_JACCARD_SQL,
         "shared-part Jaccard similarity between suppliers",
+        build="compute",
     ),
 }

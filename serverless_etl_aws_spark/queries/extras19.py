@@ -640,6 +640,7 @@ QUERIES: dict[str, Query] = {
     "ts_trend_mk": Query(
         ts_trend_mk, TS_TREND_MK_SQL,
         "Mann-Kendall trend statistic per event type (exact integers)",
+        build="compute",
     ),
     "dq_referential": Query(
         dq_referential, DQ_REFERENTIAL_SQL,
@@ -648,5 +649,6 @@ QUERIES: dict[str, Query] = {
     "graph_components": Query(
         graph_components, GRAPH_COMPONENTS_SQL,
         "connected components of the strong-trade nation graph",
+        build="compute",
     ),
 }

@@ -232,7 +232,10 @@ GROUP BY e.event_type
 
 
 QUERIES: dict[str, Query] = {
-    "scan_orc": Query(scan_orc, SCAN_ORC_SQL, "ORC source roundtrip"),
+    "scan_orc": Query(
+        scan_orc, SCAN_ORC_SQL, "ORC source roundtrip",
+        build="side_effects",
+    ),
     "agg_approx_quantile": Query(
         agg_approx_quantile, AGG_APPROX_QUANTILE_SQL,
         "GK-sketch quantiles pinned to the exact regime (hash-checked)",

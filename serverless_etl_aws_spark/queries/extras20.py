@@ -422,6 +422,7 @@ QUERIES: dict[str, Query] = {
     "graph_kcore": Query(
         graph_kcore, GRAPH_KCORE_SQL,
         "bounded k-core peeling of the co-order part graph",
+        build="compute",
     ),
     "llm_vocab_growth": Query(
         llm_vocab_growth, LLM_VOCAB_GROWTH_SQL,

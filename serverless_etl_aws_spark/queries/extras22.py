@@ -379,6 +379,7 @@ QUERIES: dict[str, Query] = {
     "graph_assortativity": Query(
         graph_assortativity, GRAPH_ASSORTATIVITY_SQL,
         "degree assortativity of the co-order part graph (rational form)",
+        build="compute",
     ),
     "dq_spc": Query(
         dq_spc, DQ_SPC_SQL,

@@ -492,6 +492,7 @@ QUERIES: dict[str, Query] = {
     "graph_clustering_coeff": Query(
         graph_clustering_coeff, GRAPH_CLUSTERING_COEFF_SQL,
         "per-node clustering coefficient via degree-oriented triangles",
+        build="compute",
     ),
     "ml_lift": Query(
         ml_lift, ML_LIFT_SQL,

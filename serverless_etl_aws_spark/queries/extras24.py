@@ -442,6 +442,7 @@ QUERIES: dict[str, Query] = {
     "graph_modularity": Query(
         graph_modularity, GRAPH_MODULARITY_SQL,
         "Newman modularity of the brand partition (rational form)",
+        build="compute",
     ),
     "ml_ab_test": Query(
         ml_ab_test, ML_AB_TEST_SQL,

@@ -541,6 +541,7 @@ QUERIES: dict[str, Query] = {
     "graph_resource_alloc": Query(
         graph_resource_alloc, GRAPH_RESOURCE_ALLOC_SQL,
         "resource-allocation link prediction on the supply graph",
+        build="compute",
     ),
     "ml_best_threshold": Query(
         ml_best_threshold, ML_BEST_THRESHOLD_SQL,

@@ -514,10 +514,12 @@ QUERIES: dict[str, Query] = {
     "ts_theil_sen": Query(
         ts_theil_sen, TS_THEIL_SEN_SQL,
         "Theil-Sen robust trend slope per event type (exact-rank median)",
+        build="compute",
     ),
     "ml_assoc_rules": Query(
         ml_assoc_rules, ML_ASSOC_RULES_SQL,
         "market-basket association rules: support/confidence/lift top-K",
+        build="compute",
     ),
     "ml_wilson_ci": Query(
         ml_wilson_ci, ML_WILSON_CI_SQL,

@@ -440,6 +440,7 @@ QUERIES: dict[str, Query] = {
     "ml_kendall_tau": Query(
         ml_kendall_tau, ML_KENDALL_TAU_SQL,
         "Kendall tau_a between daily click and purchase volumes",
+        build="compute",
     ),
     "ml_uplift_segments": Query(
         ml_uplift_segments, ML_UPLIFT_SEGMENTS_SQL,

@@ -324,10 +324,12 @@ QUERIES: dict[str, Query] = {
     "llm_knn_join": Query(
         llm_knn_join, LLM_KNN_JOIN_SQL,
         "batch k-NN join, two-stage partial top-k",
+        build="compute",
     ),
     "maintenance_compact": Query(
         maintenance_compact, MAINTENANCE_COMPACT_SQL,
         "small-file compaction with content-preservation oracle",
+        build="side_effects",
     ),
     "dq_expectations": Query(
         dq_expectations, DQ_EXPECTATIONS_SQL,

@@ -490,6 +490,7 @@ QUERIES: dict[str, Query] = {
     "ts_active_users": Query(
         ts_active_users, TS_ACTIVE_USERS_SQL,
         "DAU / trailing-7d WAU / new / cumulative actives per day",
+        build="compute",
     ),
     "ts_burstiness": Query(
         ts_burstiness, TS_BURSTINESS_SQL,

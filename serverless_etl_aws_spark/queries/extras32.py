@@ -398,6 +398,7 @@ QUERIES: dict[str, Query] = {
     "ts_cross_corr": Query(
         ts_cross_corr, TS_CROSS_CORR_SQL,
         "click->purchase lead-lag correlation scan (lags -7..7)",
+        build="compute",
     ),
     "ml_ece": Query(
         ml_ece, ML_ECE_SQL,
@@ -406,5 +407,6 @@ QUERIES: dict[str, Query] = {
     "dq_completeness_trend": Query(
         dq_completeness_trend, DQ_COMPLETENESS_TREND_SQL,
         "per-day null rates + exact Mann-Kendall missingness trend",
+        build="compute",
     ),
 }

@@ -511,5 +511,6 @@ QUERIES: dict[str, Query] = {
     "ml_label_centroids": Query(
         ml_label_centroids, ML_LABEL_CENTROIDS_SQL,
         "pairwise cosine between embedding label centroids",
+        build="compute",
     ),
 }

@@ -418,6 +418,7 @@ QUERIES: dict[str, Query] = {
     "ts_gap_fill": Query(
         ts_gap_fill, TS_GAP_FILL_SQL,
         "calendar-spine fill: silent days become explicit zero rows",
+        build="compute",
     ),
     "agg_abc_class": Query(
         agg_abc_class, AGG_ABC_CLASS_SQL,

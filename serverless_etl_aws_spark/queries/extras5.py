@@ -527,13 +527,16 @@ QUERIES: dict[str, Query] = {
         ts_resample, TS_RESAMPLE_SQL, "calendar-spine gap fill + forward fill"
     ),
     "maintenance_vacuum": Query(
-        maintenance_vacuum, MAINTENANCE_VACUUM_SQL, "partition-granular retention"
+        maintenance_vacuum, MAINTENANCE_VACUUM_SQL, "partition-granular retention",
+        build="side_effects",
     ),
     "maintenance_zorder": Query(
-        maintenance_zorder, MAINTENANCE_ZORDER_SQL, "Morton-interleave clustering"
+        maintenance_zorder, MAINTENANCE_ZORDER_SQL, "Morton-interleave clustering",
+        build="side_effects",
     ),
     "scan_binaryfile": Query(
-        scan_binaryfile, SCAN_BINARYFILE_SQL, "binaryFile payload ingestion"
+        scan_binaryfile, SCAN_BINARYFILE_SQL, "binaryFile payload ingestion",
+        build="side_effects",
     ),
 }
 

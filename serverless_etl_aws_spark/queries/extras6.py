@@ -149,9 +149,11 @@ QUERIES: dict[str, Query] = {
     "graph_pagerank": Query(
         graph_pagerank, GRAPH_PAGERANK_SQL,
         "deterministic weighted PageRank, 3 unrolled iterations",
+        build="compute",
     ),
     "llm_sim_search_pq": Query(
-        llm_sim_search_pq, None, "PQ ANN with ADC scoring + exact re-rank"
+        llm_sim_search_pq, None, "PQ ANN with ADC scoring + exact re-rank",
+        build="compute",
     ),
 }
 
@@ -336,6 +338,7 @@ QUERIES.update(
         "join_dpp": Query(
             join_dpp, JOIN_DPP_SQL,
             "runtime partition pruning via broadcast dim reuse",
+            build="side_effects",
         ),
     }
 )
@@ -422,6 +425,7 @@ QUERIES.update(
         "ml_kmeans": Query(
             ml_kmeans, ML_KMEANS_SQL,
             "distributed KMeans, exact cross-engine Lloyd iterations",
+            build="compute",
         ),
     }
 )

@@ -509,7 +509,7 @@ QUERIES: dict[str, Query] = {
         "count_if / bool_and / bool_or / max_by / min_by"),
     "graph_triangles": Query(
         graph_triangles, GRAPH_TRIANGLES_SQL,
-        "triangle enumeration on the nation trade graph"),
+        "triangle enumeration on the nation trade graph", build="compute"),
     "ml_linreg": Query(
         ml_linreg, ML_LINREG_SQL,
         "exact distributed OLS from mergeable sufficient statistics"),
@@ -520,5 +520,5 @@ QUERIES: dict[str, Query] = {
         ts_interpolate, TS_INTERPOLATE_SQL,
         "calendar-spine linear interpolation"),
     "scan_text": Query(scan_text, SCAN_TEXT_SQL,
-                       "text-line source roundtrip"),
+                       "text-line source roundtrip", build="side_effects"),
 }

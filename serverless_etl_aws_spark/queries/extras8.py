@@ -319,10 +319,12 @@ SELECT pid, vec_id, cosine FROM ranked WHERE rn <= {HN_K}
 
 QUERIES: dict[str, Query] = {
     "scan_xml": Query(scan_xml, SCAN_XML_SQL,
-                      "XML source roundtrip (Spark 4 native)"),
+                      "XML source roundtrip (Spark 4 native)",
+                      build="side_effects"),
     "llm_hard_negatives": Query(
         llm_hard_negatives, _hn_sql(),
-        "label-aware hard-negative mining (contrastive training pairs)"),
+        "label-aware hard-negative mining (contrastive training pairs)",
+        build="compute"),
     "join_interval_overlap": Query(
         join_interval_overlap, JOIN_INTERVAL_OVERLAP_SQL,
         "bin-bucketed interval-overlap join, exactly-once per pair"),

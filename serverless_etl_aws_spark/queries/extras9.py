@@ -426,7 +426,8 @@ UNION ALL SELECT * FROM r3 WHERE pair_a IS NOT NULL
 
 QUERIES["llm_bpe_train"] = Query(
     llm_bpe_train, LLM_BPE_TRAIN_SQL,
-    "3 exact distributed BPE merge iterations (unrolled SQL oracle)")
+    "3 exact distributed BPE merge iterations (unrolled SQL oracle)",
+    build="compute")
 
 
 def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,4 +483,5 @@ GROUP BY doc_id
 
 QUERIES["llm_bpe_encode"] = Query(
     llm_bpe_encode, LLM_BPE_ENCODE_SQL,
-    "apply learned BPE merges: per-doc encoded-sequence stats + hash")
+    "apply learned BPE merges: per-doc encoded-sequence stats + hash",
+    build="compute")

@@ -1251,27 +1251,32 @@ QUERIES: dict[str, Query] = {
     "llm_fingerprint": Query(llm_fingerprint, LLM_FINGERPRINT_SQL,
                              "md5 fingerprint dedup key"),
     "llm_dedup_ngram": Query(llm_dedup_ngram, LLM_DEDUP_NGRAM_SQL,
-                             "exact trigram-Jaccard pairs"),
+                             "exact trigram-Jaccard pairs", build="compute"),
     "llm_dedup_cluster": Query(llm_dedup_cluster, LLM_DEDUP_CLUSTER_SQL,
-                               "near-dup connected components"),
+                               "near-dup connected components",
+                               build="compute"),
     "llm_tfidf": Query(llm_tfidf, LLM_TFIDF_SQL,
-                       "top TF-IDF term per document"),
+                       "top TF-IDF term per document", build="compute"),
     "llm_dedup_editdist": Query(
         llm_dedup_editdist, LLM_DEDUP_EDITDIST_SQL,
         "edit-distance dedup: ngram blocking + Levenshtein verify",
+        build="compute",
     ),
     "llm_dedup_minhash": Query(llm_dedup_minhash, None,
-                               "MinHash-LSH pairs (rows-only)"),
+                               "MinHash-LSH pairs (rows-only)",
+                               build="compute"),
     "llm_dedup_simhash": Query(
         llm_dedup_simhash, LLM_DEDUP_SIMHASH_SQL,
         "SimHash band pairs, hash-checked via full oracle-side replay",
     ),
     "llm_dedup_embedding": Query(llm_dedup_embedding, LLM_DEDUP_EMBEDDING_SQL,
-                                 "embedding-cosine near-dups"),
+                                 "embedding-cosine near-dups",
+                                 build="compute"),
     "llm_sim_search": Query(llm_sim_search, LLM_SIM_SEARCH_SQL,
-                            "brute-force cosine top-k"),
+                            "brute-force cosine top-k", build="compute"),
     "llm_sim_search_ivf": Query(llm_sim_search_ivf, None,
-                                "IVF approximate top-k (rows-only)"),
+                                "IVF approximate top-k (rows-only)",
+                                build="compute"),
     "llm_decontaminate": Query(llm_decontaminate, LLM_DECONTAMINATE_SQL,
                                "8-gram eval-set decontamination"),
     "llm_pii_scrub": Query(llm_pii_scrub, LLM_PII_SCRUB_SQL,

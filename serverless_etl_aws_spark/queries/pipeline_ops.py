@@ -332,21 +332,26 @@ QUERIES: dict[str, Query] = {
     "rollup_incremental": Query(
         rollup_incremental, ROLLUP_SQL,
         "incrementally-maintained silver→gold rollup",
+        build="side_effects",
     ),
     "ingest_incremental": Query(
         ingest_incremental, INGEST_INCREMENTAL_SQL,
         "exactly-once incremental ingest: run1 = all rows, run2 = 0, "
         "silver never doubles (hash-checked)",
+        build="side_effects",
     ),
     "sink_partitioned": Query(
-        sink_partitioned, SINK_PARTITIONED_SQL, "partitioned write + pruned read"
+        sink_partitioned, SINK_PARTITIONED_SQL, "partitioned write + pruned read",
+        build="side_effects",
     ),
     "export_warehouse": Query(
         export_warehouse, EXPORT_WAREHOUSE_SQL,
         "gold→warehouse manifest export + loader readback",
+        build="side_effects",
     ),
     "rollup_upsert": Query(
         rollup_upsert, ROLLUP_UPSERT_SQL,
         "MERGE-shaped gold upsert: late rows modify existing gold rows",
+        build="side_effects",
     ),
 }

@@ -268,6 +268,7 @@ QUERIES: dict[str, Query] = {
     "scan_merge_schema": Query(
         scan_merge_schema, MERGE_SCHEMA_SQL,
         "declared-schema evolution over drifted multi-file scan",
+        build="side_effects",
     ),
     "scan_pydatasource": Query(
         scan_pydatasource, SCAN_PYDS_SQL,

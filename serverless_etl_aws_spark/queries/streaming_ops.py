@@ -589,28 +589,38 @@ QUERIES: dict[str, Query] = {
     "stream_pydatasource": Query(
         stream_pydatasource, STREAM_PYDS_SQL,
         "custom Python streaming source drained exactly-once",
+        build="side_effects",
     ),
     "stream_tumbling": Query(stream_tumbling, STREAM_TUMBLING_SQL,
-                             "1h tumbling counts (streaming)"),
+                             "1h tumbling counts (streaming)",
+                             build="side_effects"),
     "stream_sliding": Query(stream_sliding, STREAM_SLIDING_SQL,
-                            "1h/15min sliding counts (streaming)"),
+                            "1h/15min sliding counts (streaming)",
+                            build="side_effects"),
     "stream_session": Query(stream_session, STREAM_SESSION_SQL,
-                            "30min-gap session windows (streaming)"),
+                            "30min-gap session windows (streaming)",
+                            build="side_effects"),
     "stream_late_data": Query(stream_late_data, STREAM_LATE_DATA_SQL,
-                              "watermark closed-window emission"),
+                              "watermark closed-window emission",
+                              build="side_effects"),
     "stream_stateful": Query(
         stream_stateful, STREAM_STATEFUL_SQL,
         "applyInPandasWithState running profile, hash-checked via the "
         "pinned-batch relational rule + integer-cent accounting",
+        build="side_effects",
     ),
     "stream_dedup": Query(stream_dedup, STREAM_DEDUP_SQL,
-                          "streaming exact dedup (append mode)"),
+                          "streaming exact dedup (append mode)",
+                          build="side_effects"),
     "stream_join": Query(stream_join, STREAM_JOIN_SQL,
-                         "stream-static broadcast enrichment join"),
+                         "stream-static broadcast enrichment join",
+                         build="side_effects"),
     "stream_cdc": Query(stream_cdc, STREAM_CDC_SQL,
-                        "version-resolved CDC apply with tombstones"),
+                        "version-resolved CDC apply with tombstones",
+                        build="side_effects"),
     "stream_stream_join": Query(
         stream_stream_join, STREAM_STREAM_JOIN_SQL,
         "watermarked stream-stream interval join (bounded state)",
+        build="side_effects",
     ),
 }

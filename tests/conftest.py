@@ -26,6 +26,34 @@ def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF", SF_SMOKE)
 
 
+@pytest.fixture
+def job_task_counts(spark):
+    """``job_task_counts(fn)`` runs ``fn`` and returns the task count of
+    every Spark job started meanwhile, under any job group: streaming
+    micro-batches run under their query's own group. The DAG scheduler
+    numbers jobs in submission order, so those jobs are the ids it handed
+    out while ``fn`` ran; the listener bus is drained before the status
+    store is read."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tracker = sc.statusTracker()
+
+    def count(fn) -> list[int]:
+        first = jsc.dagScheduler().nextJobId()
+        fn()
+        last = jsc.dagScheduler().nextJobId()
+        jsc.listenerBus().waitUntilEmpty()
+        return [
+            sum(
+                tracker.getStageInfo(sid).numTasks
+                for sid in tracker.getJobInfo(jid).stageIds
+            )
+            for jid in range(first, last)
+        ]
+
+    return count
+
+
 #: Modules whose tests form the per-round drift-axis SWEEP tier (each is
 #: a full-registry strict cross-engine sweep over a perturbed fixture —
 #: hundreds of cases per axis, the bulk of suite wall-clock). Everything

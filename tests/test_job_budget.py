@@ -1,13 +1,11 @@
 """Spark-job budgets of the gold path: metadata-only jobs that must not
 come back.
 
-Jobs are counted with a job group and ``statusTracker``: every job
-started while the group is set belongs to it, whichever code starts it.
+Jobs are counted with the ``job_task_counts`` fixture: every job started
+while the measured call runs, whichever code starts it.
 """
 
 from __future__ import annotations
-
-import uuid
 
 import pytest
 
@@ -18,26 +16,9 @@ from serverless_etl_aws_spark.pipeline.export import WarehouseExporter
 LISTING_THRESHOLD = 32
 
 
-def job_task_counts(spark, fn) -> list[int]:
-    """Run ``fn`` and return the task count of every job it started."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    tracker = sc.statusTracker()
-    return [
-        sum(
-            tracker.getStageInfo(sid).numTasks
-            for sid in tracker.getJobInfo(jid).stageIds
-        )
-        for jid in sorted(tracker.getJobIdsForGroup(group))
-    ]
-
-
-def test_gold_read_over_threshold_starts_no_listing_job(spark, tmp_path):
+def test_gold_read_over_threshold_starts_no_listing_job(
+    spark, tmp_path, job_task_counts,
+):
     """40 partitions written by two commits of 20: read() passes two
     snapshot roots, so building the DataFrame lists them on the driver.
     One root per partition (40 > 32) made Spark list them with a job of
@@ -49,7 +30,7 @@ def test_gold_read_over_threshold_starts_no_listing_job(spark, tmp_path):
             "day string, v long",
         ))
     assert len(table.current_partition_paths()) > LISTING_THRESHOLD
-    tasks = job_task_counts(spark, table.read)
+    tasks = job_task_counts(table.read)
     # the listing job runs one task per path and starts only above the
     # threshold; what may run is the one-task footer-inference job
     assert all(n <= LISTING_THRESHOLD for n in tasks), tasks
@@ -57,17 +38,18 @@ def test_gold_read_over_threshold_starts_no_listing_job(spark, tmp_path):
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv"])
-def test_export_starts_no_job_after_its_write(spark, tmp_path, fmt):
+def test_export_starts_no_job_after_its_write(
+    spark, tmp_path, fmt, job_task_counts,
+):
     """An export runs exactly the jobs of writing its frame: the row
     count rides the write, and nothing is read back afterwards."""
     df = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 5 AS k")
     df = df.groupBy("k").count()
     plain = job_task_counts(
-        spark,
         lambda: df.write.option("header", "true").format(fmt).save(
             str(tmp_path / "plain")
         ),
     )
     exp = WarehouseExporter(str(tmp_path / "exports"), fmt=fmt)
-    exported = job_task_counts(spark, lambda: exp.export(df, "t"))
+    exported = job_task_counts(lambda: exp.export(df, "t"))
     assert len(exported) == len(plain), (exported, plain)

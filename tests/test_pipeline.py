@@ -285,6 +285,39 @@ class TestActionDispatcher:
         resp = d.handle({"action": "bogus"})
         assert resp["statusCode"] == 400
 
+    def test_names_needing_url_encoding_are_processed(
+        self, spark, sf_dir, tmp_path,
+    ):
+        """The file-source log records URL-encoded paths: a space or a
+        ``%`` in a file name must not keep the file unprocessed forever."""
+        import shutil
+
+        from serverless_etl_aws_spark.catalog import events_reader_setup
+        from serverless_etl_aws_spark.pipeline.actions import ActionDispatcher
+        from serverless_etl_aws_spark.pipeline.ingest import IncrementalIngest
+
+        bronze = tmp_path / "bronze"
+        bronze.mkdir()
+        src = os.path.join(sf_dir, "events.parquet")
+        for name in ("with space.parquet", "pct%41.parquet"):
+            shutil.copy(src, bronze / name)
+        read_schema, normalize_ts = events_reader_setup(spark, str(bronze))
+        d = ActionDispatcher(
+            str(bronze), str(tmp_path / "ckpt"), str(tmp_path / "archive")
+        )
+        assert len(d.get_unprocessed()) == 2
+
+        r = IncrementalIngest(
+            spark,
+            bronze_dir=str(bronze),
+            silver_dir=str(tmp_path / "silver"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            schema=read_schema,
+            transform=normalize_ts,
+        ).run_once()
+        assert r.files_processed == 2
+        assert d.get_unprocessed() == []
+
 
 def test_rollup_refresh_guards_partition_cardinality(spark, tmp_path):
     """A high-cardinality 'partition' column must fail loudly instead of
