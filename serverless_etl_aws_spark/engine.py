@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from . import catalog, schemas
+from .pipeline.ingest import MAX_RECORDS_PER_FILE
 from .pipeline.report import RunReport
 from .pipeline.taxi_job import TaxiBronzeToSilver, TaxiJobConfig
 from .session import get_spark, tune_for_session
@@ -128,14 +129,14 @@ class Engine:
 
     def write_partitioned(
         self, df: DataFrame, path: str, partition_by: str,
-        max_records_per_file: int = 1_000_000,
     ) -> None:
         """Partitioned append sink (reference: bronze_to_silver.py:84-85)
-        with repartition-before-write file sizing."""
+        with the ingest's layout rule: one hash exchange on the partition
+        column, so each partition value is written by one task."""
         (
             df.repartition(partition_by)
             .write.mode("append")
-            .option("maxRecordsPerFile", max_records_per_file)
+            .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
             .partitionBy(partition_by)
             .parquet(path)
         )

@@ -23,7 +23,11 @@ Scale notes (100 TB): file-source listing is incremental
 (``maxFilesPerTrigger`` bounds batch size); the silver write is
 Hive-partitioned on a bounded-cardinality column (the reference's
 ``payment_type`` choice at bronze_to_silver.py:85 — scale-sane, ~6 values)
-and sized with ``maxRecordsPerFile`` toward ~128 MB files.
+and capped at :data:`MAX_RECORDS_PER_FILE` rows per file.
+
+Layout rule: a partitioned batch is hash-repartitioned on its partition
+column right before the write (as ``Engine.write_partitioned`` does), so
+each partition value is written by exactly one task per batch.
 """
 
 from __future__ import annotations
@@ -37,6 +41,9 @@ from pyspark.sql.types import StructType
 
 from .report import RunReport
 
+#: ``maxRecordsPerFile`` of every partitioned sink (silver ingest,
+#: ``Engine.write_partitioned``, the ``sink_partitioned`` key).
+MAX_RECORDS_PER_FILE = 1_000_000
 
 #: Upper bound on partition values carried through the silver write's
 #: Observation (mirrors PartitionedRollup's default cap). Past it the
@@ -46,8 +53,8 @@ from .report import RunReport
 #: aggregation buffers before the cap applies, so a grossly misconfigured
 #: partition column (an id, a timestamp) can pressure memory before the
 #: fallback fires. The observation is therefore opt-in (hooks that accept
-#: ``touched``), and the bounded-by-construction path remains the hook's
-#: own ``distinct().limit(cap+1)``.
+#: ``touched`` and ``touched_col``), and the bounded-by-construction path
+#: remains the hook's own ``distinct().limit(cap+1)``.
 _TOUCHED_OBS_CAP = 10_000
 
 
@@ -112,7 +119,6 @@ class IncrementalIngest:
         partition_by: str | None = None,
         transform=None,
         max_files_per_trigger: int | None = None,
-        max_records_per_file: int = 1_000_000,
         reporter: RunReport | None = None,
         post_batch=None,
     ) -> None:
@@ -130,15 +136,16 @@ class IncrementalIngest:
         self.partition_by = partition_by
         self.transform = transform or (lambda df: df)
         self.max_files_per_trigger = max_files_per_trigger
-        self.max_records_per_file = max_records_per_file
         self.reporter = reporter or RunReport()
         # called after each batch's silver write with the transformed batch
         # DataFrame — downstream maintenance hook (e.g. gold rollup refresh,
         # pipeline/rollup.py). Runs before the checkpoint commit, so a crash
         # mid-hook replays the batch and the hook idempotently again.
-        # Hooks that also accept a ``touched`` parameter (rollup's
-        # refresh_for_batch) receive the batch's distinct partition values
-        # from the silver write's own Observation — zero extra jobs.
+        # Hooks that also accept ``touched`` and ``touched_col`` (rollup's
+        # refresh_for_batch) receive the batch's distinct values of
+        # ``touched_col`` (this ingest's partition column) from the silver
+        # write's own Observation — zero extra jobs. The column travels
+        # with the values: a hook keyed on another column must recount.
         self.post_batch = post_batch
         self._post_batch_takes_touched = False
         if post_batch is not None and partition_by:
@@ -149,8 +156,10 @@ class IncrementalIngest:
                 # Opt-in by NAME only: a hook with some other second
                 # parameter (e.g. ``def hook(df, log=print)``) must keep
                 # its one-arg call contract, not crash on an unexpected
-                # ``touched`` keyword.
-                self._post_batch_takes_touched = "touched" in params or any(
+                # keyword.
+                self._post_batch_takes_touched = {
+                    "touched", "touched_col"
+                } <= params.keys() or any(
                     p.kind is inspect.Parameter.VAR_KEYWORD
                     for p in params.values()
                 )
@@ -214,26 +223,8 @@ class IncrementalIngest:
                     F.sum(pcol.isNull().cast("long")).alias("n_null_part")
                 )
             staged = batch_df.withColumn("ingest_batch", F.lit(batch_id))
-            # Parallelism repair for the partitioned encode (guide §2.5):
-            # a batch that arrives as fewer source splits than the
-            # session's cores (here: one bronze file per trigger) would
-            # parquet-encode EVERY partition dir from that handful of
-            # tasks. One hash exchange on the partition column spreads
-            # the encode; at scale a batch is already many splits and the
-            # gate reads "already parallel". The exchange CAN change
-            # per-dir file counts (without it, a partition value spanning
-            # several source splits is written by several tasks); the
-            # dynamic-overwrite replay stays idempotent either way — the
-            # whole dir is replaced per batch (ADVICE r14). The gate is
-            # the batch's exact scan-partition count (a single LARGE file
-            # still splits into many scan partitions, which it honors).
-            parallelism = self.spark.sparkContext.defaultParallelism
-            if self.partition_by and (
-                staged.rdd.getNumPartitions() < parallelism
-            ):
-                staged = staged.repartition(
-                    parallelism, F.col(self.partition_by)
-                )
+            if self.partition_by:
+                staged = staged.repartition(F.col(self.partition_by))
             out = (
                 staged.observe(obs, *metrics)
                 .write.mode("overwrite")
@@ -244,7 +235,7 @@ class IncrementalIngest:
                 # (26th axis). An already-uppercase value is a no-op under
                 # every locale's casing rules.
                 .option("partitionOverwriteMode", "DYNAMIC")
-                .option("maxRecordsPerFile", self.max_records_per_file)
+                .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
             )
             cols = ["ingest_batch"] + (
                 [self.partition_by] if self.partition_by else []
@@ -258,7 +249,9 @@ class IncrementalIngest:
                         touched.append(None)
                     if len(touched) > _TOUCHED_OBS_CAP:
                         touched = None  # overflow: let the hook recount
-                    self.post_batch(batch_df, touched=touched)
+                    self.post_batch(
+                        batch_df, touched=touched, touched_col=self.partition_by
+                    )
                 else:
                     self.post_batch(batch_df)
             counts["rows"] += int(obs.get["rows"])

@@ -124,7 +124,10 @@ class PartitionedRollup:
         return self.table.exists()
 
     def refresh_for_batch(
-        self, batch_df: DataFrame, touched: list | None = None
+        self,
+        batch_df: DataFrame,
+        touched: list | None = None,
+        touched_col: str | None = None,
     ) -> int:
         """Refresh the partitions a just-ingested batch touches (call from
         the ingest's foreachBatch, after the silver write).
@@ -132,8 +135,11 @@ class PartitionedRollup:
         ``touched`` lets the caller hand over the batch's distinct
         partition values when it already knows them — IncrementalIngest
         rides a ``collect_set`` on its silver-write Observation, saving a
-        whole re-read-the-batch Spark job per micro-batch. When absent,
-        they are computed here with a capped distinct.
+        whole re-read-the-batch Spark job per micro-batch. ``touched_col``
+        names the column those values belong to (None: this rollup's
+        ``partition_col``). When they are absent, or belong to another
+        column (an ingest partitioned by ``event_type`` feeding a rollup
+        on ``event_date``), they are computed here with a capped distinct.
 
         Either path is bounded by ``max_touched_partitions``: a partition
         column is by contract low-cardinality (days, payment types), and a
@@ -141,7 +147,7 @@ class PartitionedRollup:
         fail loudly HERE rather than OOM the driver — the limit+1 fetch
         (or the caller's sliced collect_set) never hands over more than
         the cap."""
-        if touched is None:
+        if touched is None or touched_col not in (None, self.partition_col):
             touched_df = (
                 batch_df.select(self.partition_col)
                 .distinct()

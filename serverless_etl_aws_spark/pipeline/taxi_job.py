@@ -17,10 +17,11 @@ engine (SURVEY.md §7 step 4):
   at the orchestration level.
 
 Scale notes (100 TB): ``payment_type`` has ~6 values — a bounded-cardinality
-partition key (good). The silver write repartitions by the partition column
-first so each Hive partition is written by a bounded number of tasks
-(avoids the small-files explosion of 1000 tasks × 6 partitions), with
-``maxRecordsPerFile`` capping file size.
+partition key (good). The transform does not repartition: the ingest write
+(pipeline/ingest.py) hash-repartitions every batch on ``payment_type``, so
+each Hive partition is written by one task per batch (no small-files
+explosion of 1000 tasks × 6 partitions), with ``maxRecordsPerFile`` capping
+file size.
 """
 
 from __future__ import annotations
@@ -89,17 +90,10 @@ class TaxiBronzeToSilver:
             checkpoint_dir=cfg.checkpoint_dir,
             schema=schemas.NYC_TAXI,
             partition_by="payment_type",
-            transform=self._transform,
+            transform=clean_taxi,
             max_files_per_trigger=cfg.max_files_per_trigger,
             reporter=self.reporter,
         )
-
-    @staticmethod
-    def _transform(df: DataFrame) -> DataFrame:
-        cleaned = clean_taxi(df)
-        # bounded-cardinality partition col → repartition before the
-        # partitioned write so each Hive partition gets few, large files
-        return cleaned.repartition("payment_type")
 
     def run_month(self, year_month: str) -> IngestResult | None:
         """Orchestrated run: watermark gate (reference:

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import events_reader_setup
-from ..pipeline.ingest import IncrementalIngest
+from ..pipeline.ingest import MAX_RECORDS_PER_FILE, IncrementalIngest
 from ..streaming.windows import split_parquet_by_mod
 from . import Query
 from ._util import dsum, sql_dsum, t, scratch_root, fresh_dir
@@ -105,7 +105,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
     (
         li.write.mode("append")
-        .option("maxRecordsPerFile", 1_000_000)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
         .partitionBy("l_returnflag")
         .parquet(out)
     )

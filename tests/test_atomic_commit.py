@@ -404,6 +404,7 @@ def test_true_concurrent_writers_converge(spark, tmp_path):
     version count must equal the commit count, and the final state must
     equal the sequential replay — whatever rename races occurred."""
     import threading
+    import traceback
 
     table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
     errors = []
@@ -415,7 +416,7 @@ def test_true_concurrent_writers_converge(spark, tmp_path):
                     df_of(spark, [(day, "a", v)])
                 )
         except Exception as exc:  # noqa: BLE001 — surfaced to the assert
-            errors.append(exc)
+            errors.append("".join(traceback.format_exception(exc)))
 
     t1 = threading.Thread(target=writer, args=("d1", 5))
     t2 = threading.Thread(target=writer, args=("d2", 5))
@@ -609,6 +610,7 @@ def test_eight_writer_contention_soak(spark, tmp_path):
     value, and the shared partition must hold the last value of
     whichever writer published last — never a torn or stale mix."""
     import threading
+    import traceback
 
     from serverless_etl_aws_spark.pipeline.atomic import CommitConflict
 
@@ -636,7 +638,7 @@ def test_eight_writer_contention_soak(spark, tmp_path):
                 with lock:
                     published.append((w, c))
         except Exception as exc:  # noqa: BLE001 — surfaced to the assert
-            errors.append(exc)
+            errors.append("".join(traceback.format_exception(exc)))
 
     threads = [
         threading.Thread(target=writer, args=(w,))

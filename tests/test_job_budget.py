@@ -1,5 +1,5 @@
-"""Spark-job budgets of the gold path: metadata-only jobs that must not
-come back.
+"""Spark-job budgets of the silver and gold paths: probe and
+metadata-only jobs that must not come back.
 
 Jobs are counted with the ``job_task_counts`` fixture: every job started
 while the measured call runs, whichever code starts it.
@@ -53,3 +53,49 @@ def test_export_starts_no_job_after_its_write(
     exp = WarehouseExporter(str(tmp_path / "exports"), fmt=fmt)
     exported = job_task_counts(lambda: exp.export(df, "t"))
     assert len(exported) == len(plain), (exported, plain)
+
+
+def test_ingest_runs_the_jobs_of_a_plain_partitioned_write(
+    spark, tmp_path, job_task_counts,
+):
+    """One bronze file through the taxi job's ingest runs exactly the
+    jobs of one batch write of the cleaned frame under the same layout
+    rule (one hash exchange on the partition column): no job probes the
+    batch's partitioning first, and no second exchange follows."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from serverless_etl_aws_spark import schemas
+    from serverless_etl_aws_spark.pipeline.taxi_job import (
+        TaxiBronzeToSilver, TaxiJobConfig, clean_taxi,
+    )
+
+    bronze = str(tmp_path / "bronze")
+    base = dt.datetime(2024, 3, 1, 8)
+    rows = [
+        (
+            1, base + dt.timedelta(minutes=i),
+            base + dt.timedelta(minutes=i + 12), 1.0, 2.0, 1.0, "N",
+            100, 200, i % 6 + 1, 10.0, 0.5, 0.5, 2.0, 0.0, 0.3, 13.3,
+            2.5, 0.0,
+        )
+        for i in range(600)
+    ]
+    spark.createDataFrame(rows, schemas.NYC_TAXI).coalesce(1).write.parquet(
+        bronze
+    )
+    job = TaxiBronzeToSilver(spark, TaxiJobConfig(
+        bronze_dir=bronze, silver_dir=str(tmp_path / "silver"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        watermark_path=str(tmp_path / "wm.json"),
+    ))
+    ingest = job_task_counts(job.run_available)
+    cleaned = clean_taxi(spark.read.schema(schemas.NYC_TAXI).parquet(bronze))
+    plain = job_task_counts(
+        lambda: cleaned.withColumn("ingest_batch", F.lit(0))
+        .repartition(F.col("payment_type"))
+        .write.partitionBy("ingest_batch", "payment_type")
+        .parquet(str(tmp_path / "plain"))
+    )
+    assert len(ingest) == len(plain), (ingest, plain)

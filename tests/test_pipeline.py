@@ -611,6 +611,58 @@ def test_post_batch_hook_with_other_second_param_not_broken(spark, tmp_path):
         .collect()
     )
     assert sorted(seen["touched"]) == expected
+    assert seen["touched_col"] == "event_type"
+
+
+def test_refresh_for_batch_recounts_touched_of_another_column(spark, tmp_path):
+    """An ingest partitioned by event_type hands its hook event_type
+    values; a rollup keyed on event_date must not read them as dates
+    (every gold partition would be 'replaced' by nothing) but recount
+    its own, so gold equals the aggregate of all silver."""
+    from pyspark.sql import functions as F
+
+    from serverless_etl_aws_spark.catalog import events_reader_setup
+    from serverless_etl_aws_spark.pipeline.ingest import IncrementalIngest
+    from serverless_etl_aws_spark.pipeline.rollup import PartitionedRollup
+    from serverless_etl_aws_spark.streaming.windows import split_parquet_by_mod
+
+    bronze = str(tmp_path / "bronze")
+    os.makedirs(bronze)
+    split_parquet_by_mod(
+        "/root/testdata/sf0.001/events.parquet", bronze, 1,
+        order_col="event_id",
+    )
+    read_schema, normalize_ts = events_reader_setup(spark, bronze)
+
+    def to_silver(df):
+        return normalize_ts(df).withColumn(
+            "event_date", F.date_format("ts", "yyyy-MM-dd")
+        )
+
+    def to_gold(df):
+        return df.groupBy("event_date").agg(F.count(F.lit(1)).alias("n"))
+
+    silver = str(tmp_path / "silver")
+    roll = PartitionedRollup(
+        spark, silver, str(tmp_path / "gold"), "event_date",
+        aggregate=to_gold,
+    )
+    IncrementalIngest(
+        spark,
+        bronze_dir=bronze,
+        silver_dir=silver,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        schema=read_schema,
+        partition_by="event_type",
+        transform=to_silver,
+        post_batch=roll.refresh_for_batch,
+    ).run_once()
+    want = sorted(to_gold(spark.read.parquet(silver)).collect())
+    assert len(want) > 1
+    gold = roll.read_gold().select(
+        F.col("event_date").cast("string").alias("event_date"), "n"
+    )
+    assert sorted(gold.collect()) == want
 
 
 def test_rollup_upsert_preserves_null_partition(spark, tmp_path):
