@@ -117,11 +117,31 @@ class PartitionedRollup:
             replaced=touched_values,
         )
 
-    def _gold_exists(self) -> bool:
-        """A gold table exists once its first manifest is published; the
-        check goes through the Hadoop FileSystem API, so gold may live on
-        any supported scheme (file:, s3a:, hdfs:)."""
-        return self.table.exists()
+    def _capped_touched(
+        self, op: str, df: DataFrame, touched: list | None = None
+    ) -> list:
+        """The distinct ``partition_col`` values of ``df`` (or the
+        caller's ``touched``), at most ``max_touched_partitions`` of them.
+        A partition column is by contract low-cardinality (days, payment
+        types); a misconfigured high-cardinality column (an id, a
+        timestamp) fails loudly HERE rather than OOM the driver — the
+        limit+1 fetch never collects more than one value over the cap."""
+        if touched is None:
+            touched = [
+                r[0]
+                for r in df.select(self.partition_col)
+                .distinct()
+                .limit(self.max_touched_partitions + 1)
+                .collect()
+            ]
+        if len(touched) > self.max_touched_partitions:
+            raise ValueError(
+                f"{op}: more than {self.max_touched_partitions} distinct "
+                f"{self.partition_col!r} values — {self.partition_col!r} "
+                f"does not look like a partition column; pick a "
+                f"low-cardinality column or raise max_touched_partitions"
+            )
+        return touched
 
     def refresh_for_batch(
         self,
@@ -140,29 +160,12 @@ class PartitionedRollup:
         ``partition_col``). When they are absent, or belong to another
         column (an ingest partitioned by ``event_type`` feeding a rollup
         on ``event_date``), they are computed here with a capped distinct.
-
-        Either path is bounded by ``max_touched_partitions``: a partition
-        column is by contract low-cardinality (days, payment types), and a
-        misconfigured high-cardinality column (an id, a timestamp) must
-        fail loudly HERE rather than OOM the driver — the limit+1 fetch
-        (or the caller's sliced collect_set) never hands over more than
-        the cap."""
-        if touched is None or touched_col not in (None, self.partition_col):
-            touched_df = (
-                batch_df.select(self.partition_col)
-                .distinct()
-                .limit(self.max_touched_partitions + 1)
-            )
-            touched = [r[0] for r in touched_df.collect()]
-        if len(touched) > self.max_touched_partitions:
-            raise ValueError(
-                f"refresh_for_batch: batch touches more than "
-                f"{self.max_touched_partitions} distinct "
-                f"{self.partition_col!r} values — {self.partition_col!r} "
-                f"does not look like a partition column; pick a "
-                f"low-cardinality column or raise max_touched_partitions"
-            )
-        return self.refresh_partitions(touched)
+        Either path is bounded by ``max_touched_partitions``."""
+        if touched_col not in (None, self.partition_col):
+            touched = None
+        return self.refresh_partitions(
+            self._capped_touched("refresh_for_batch", batch_df, touched)
+        )
 
     def upsert(
         self,
@@ -199,21 +202,10 @@ class PartitionedRollup:
         # without the checkpoint the full upstream aggregation would
         # execute twice.
         delta_gold = delta_gold.localCheckpoint(eager=True)
-        touched_df = (
-            delta_gold.select(self.partition_col)
-            .distinct()
-            .limit(self.max_touched_partitions + 1)
-        )
-        touched = [r[0] for r in touched_df.collect()]
+        touched = self._capped_touched("upsert", delta_gold)
         if not touched:
             return 0
-        if len(touched) > self.max_touched_partitions:
-            raise ValueError(
-                f"upsert: delta touches more than "
-                f"{self.max_touched_partitions} distinct "
-                f"{self.partition_col!r} values"
-            )
-        if self._gold_exists():
+        if self.table.exists():
             # No read-before-overwrite barrier needed: the merged plan
             # reads the CURRENT snapshot's files while the commit writes
             # a NEW snapshot dir — the manifest flip happens only after

@@ -100,7 +100,30 @@ def spread(df: DataFrame, sf_dir: str, table: str = "lineitem") -> DataFrame:
     gate ``natural >= defaultParallelism`` holds, and no exchange is
     added — the repartition can never trigger on data that is already
     parallel. Results are partition-count independent (environment axis
-    25 pins that property for every registry key)."""
+    25 pins that property for every registry key).
+
+    The exchange costs CPU, so a query calls this only where a per-site
+    A/B at sf0.1 shows a wall win: on ``local[4]`` with 4 shuffle
+    partitions, spread must win at least 6 of 7 interleaved pairs, and
+    its median gap must exceed the quartile spread of the runs without
+    it, in each of two sets. The sites that pass, medians of the 14
+    pairs, with → without (CPU is the JVM's and the driver's, JIT
+    threads left out); the last column is 7 pairs at sf0.01, where the
+    win is small or gone:
+
+    ====================  =============  =============  =============
+    key                   wall s         CPU s          sf0.01 wall s
+    ====================  =============  =============  =============
+    join_range            0.83 → 2.63    2.46 → 2.68    0.15 → 0.19
+    llm_dedup_embedding   1.56 → 4.11    4.69 → 4.19    0.54 → 0.63
+    llm_bpe_pairs         0.58 → 1.49    1.63 → 1.53    0.18 → 0.24
+    llm_decontaminate     0.97 → 1.72    2.04 → 1.75    0.32 → 0.38
+    ml_feature_screen     1.69 → 2.27    3.27 → 2.31    0.39 → 0.43
+    llm_dedup_editdist    2.07 → 2.65    4.49 → 3.63    0.83 → 0.81
+    llm_dedup_ngram       1.84 → 2.27    3.50 → 2.82    0.77 → 0.73
+    llm_dedup_simhash     1.52 → 1.94    0.49 → 0.40    1.01 → 0.80
+    ====================  =============  =============  =============
+    """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if natural_scan_tasks(sf_dir, table) >= target:

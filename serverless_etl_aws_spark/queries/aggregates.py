@@ -19,19 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import Query
-from ._util import DEC, davg, dec, dsum, spread, sql_davg, sql_dsum, t
+from ._util import DEC, davg, dec, dsum, sql_davg, sql_dsum, t
 
 
 def agg_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: pricing summary report by returnflag/linestatus."""
-    # spread AFTER the filter (pushdown still reaches the scan) so the
-    # decimal-exact partial aggregation runs wide instead of on the
-    # fixture's single unsplittable scan task; no-op at scale.
-    li = spread(
-        t(spark, sf_dir, "lineitem").filter(
-            F.col("l_shipdate") <= F.to_timestamp(F.lit("2001-09-01"))
-        ),
-        sf_dir,
+    li = t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.to_timestamp(F.lit("2001-09-01"))
     )
     disc_price = dec("l_extendedprice") * (F.lit(1) - F.col("l_discount")).cast(DEC)
     # Cast the exact product back to DECIMAL(18,4) before multiplying again —

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import Query
-from ._util import spread, t
+from ._util import t
 
 LPA_ITERS = 3
 
@@ -229,10 +229,7 @@ def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     — Catalyst compiles this via Expand (one row per distinct-group per
     input row) so all distincts resolve in a single aggregation pipeline
     instead of N self-joined scans."""
-    # spread before the Expand-based multi-DISTINCT plan: Expand triples
-    # the row stream BEFORE the partial aggregate, all of which would
-    # otherwise run on the single row-group's one scan task (guide §2.5).
-    li = spread(t(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    li = t(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(

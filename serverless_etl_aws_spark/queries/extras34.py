@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import Query
-from ._util import dec, fquant, spread, sql_vec_dim_ok, t, vec_dim_ok, vec_finite
+from ._util import dec, fquant, sql_vec_dim_ok, t, vec_dim_ok, vec_finite
 
 # ----------------------------------------------------------------- dq_json_schema
 
@@ -48,14 +48,7 @@ def dq_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one explode of the per-row key list (bounded by JSON width,
     not corpus size), one map-side-combinable per-key collapse; the
     non-null row total is a window over the keys-sized relation."""
-    # spread after the pushed-down null filter: from_json +
-    # json_object_keys are the per-row cost and would otherwise run on
-    # the single row-group's one scan task (guide §2.5).
-    ev = spread(
-        t(spark, sf_dir, "events").filter(F.col("props").isNotNull()),
-        sf_dir,
-        "events",
-    )
+    ev = t(spark, sf_dir, "events").filter(F.col("props").isNotNull())
     # from_json to map + explode yields (key, value) pairs natively —
     # get_json_object can't take a per-row path (literal-only).
     # Malformed-JSON hardening (round-11 probe): rows whose props don't

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import Query
-from ._util import dec, fquant, spread, t
+from ._util import dec, fquant, t
 
 # ---------------------------------------------------------------- ml_churn_labels
 
@@ -244,14 +244,8 @@ def agg_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable per-part collapse, one global
     ordered window (range-partitioned sort at cluster scale), then a
     3-row aggregate."""
-    # spread after the pushed-down filter: the decimal partial aggregate
-    # over 600k rows would otherwise run on one scan task (guide §2.5).
-    li = spread(
-        t(spark, sf_dir, "lineitem").filter(
-            F.col("l_extendedprice").isNotNull()
-        ),
-        sf_dir,
-        "lineitem",
+    li = t(spark, sf_dir, "lineitem").filter(
+        F.col("l_extendedprice").isNotNull()
     )
     per_part = li.groupBy("l_partkey").agg(
         F.sum(dec("l_extendedprice")).alias("rev")

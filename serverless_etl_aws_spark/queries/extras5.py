@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import Query
-from ._util import dec, dsum, fquant, fresh_dir, scratch_root, spread, t
+from ._util import dec, dsum, fquant, fresh_dir, scratch_root, t
 
 SCRATCH = scratch_root()
 
@@ -39,10 +39,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     also the distributed-correct formulation: the five partials are the
     mergeable sketch a 1000-node cluster would combine.
     """
-    # spread: the per-row DECIMAL×DECIMAL power products are the cost
-    # here and would otherwise run on the single row-group's one scan
-    # task (guide §2.5); at scale the gate reads "already parallel".
-    li = spread(t(spark, sf_dir, "lineitem"), sf_dir, "lineitem")
+    li = t(spark, sf_dir, "lineitem")
     qty, price, disc = dec("l_quantity"), dec("l_extendedprice"), dec("l_discount")
     partials = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),

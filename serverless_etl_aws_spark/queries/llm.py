@@ -462,8 +462,7 @@ def llm_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^18-bucket collision-lossy sets; max observed delta 2e-4). The
     MLlib variant remains available and head-to-head-tested."""
     return minhash_banded_pairs(
-        spread(t(spark, sf_dir, "documents"), sf_dir, "documents"),
-        dist_threshold=0.5,
+        t(spark, sf_dir, "documents"), dist_threshold=0.5
     )
 
 
@@ -1111,11 +1110,8 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     docs = t(spark, sf_dir, "documents")
-    # spread only the shingle-pass input: the nodes relation feeds the
-    # iterative component loop, where extra partitions inflate every
-    # round's fixed cost (measured +0.6 s when nodes were spread too)
     pairs = ngram_jaccard_pairs(
-        spread(docs, sf_dir, "documents"), threshold=0.8, block_col="lang",
+        docs, threshold=0.8, block_col="lang",
         max_shingle_df=NGRAM_MAX_SHINGLE_DF,
     ).select("doc_a", "doc_b")
     comp = connected_components(

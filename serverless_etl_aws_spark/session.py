@@ -23,6 +23,64 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+#: The engine's runtime SQL confs: :func:`get_spark` builds its session
+#: with them and :func:`tune_for_session` sets them on a session handed in
+#: (the driver's, ``Engine(spark=...)``), so both paths plan alike.
+_RUNTIME_SQL_CONFS: dict[str, str] = {
+    # streaming stateful ops pin their shuffle-partition count at
+    # checkpoint creation and AQE does not coalesce them — 200 tiny
+    # state tasks on a laptop-scale run is pure overhead
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # AQE's coalesce floor is 1 MiB of COMPRESSED shuffle bytes per
+    # partition (minPartitionSize) — at that floor a CPU-heavy stage
+    # over a few MB of shuffle (checksums, per-row expression work,
+    # percentile sorts) coalesces onto 1-3 cores and serializes
+    # (measured: ml_feature_screen ran its whole 2.4 s compute in a
+    # 3-task stage). 64 KiB keeps such stages at the session's
+    # parallelism; stages with ≥ cores×1 MiB of shuffle — every
+    # at-scale stage that matters — are unaffected because
+    # parallelismFirst sizing already spreads them.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # Stateful streaming state lives OFF-HEAP in native RocksDB
+    # instead of on-heap HashMaps: the HDFS-backed provider's state
+    # maps made every stream key's wall time a GC barometer under a
+    # long session's accumulated heap pressure (r13 adjudication:
+    # stream_session escalated 4.9→16→21 s without an explicit
+    # System.gc between keys; with RocksDB the state no longer
+    # competes with the tenured heap). minBatchesToRetain is
+    # trimmed from 100: these drains are one-shot AvailableNow
+    # queries — nothing ever replays more than the last snapshot.
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    "spark.sql.streaming.minBatchesToRetain": "2",
+    # Changelog checkpointing: per-batch commits upload the small
+    # change set instead of re-zipping the whole RocksDB snapshot
+    # (snapshots move to the background maintenance thread).
+    # Idle-box A/B at sf0.1: stream_stream_join 3.34→2.90,
+    # stream_late_data 2.00→1.68, stream_session 1.35→1.19,
+    # stream_tumbling 0.90→0.81, stream_stateful neutral (7-run
+    # medians) — and at scale per-commit cost stops growing with
+    # state size, which is the production argument.
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Python UDTFs run row-at-a-time (BatchEvalPythonUDTF, pickled
+    # rows) unless the Arrow path is opted into — measured round 13:
+    # the flag flips udtf_python to ArrowEvalPythonUDTF with
+    # identical results (parity re-verified), putting the fourth
+    # Python API shape on the same Arrow-batch transport as
+    # pandas_udf/mapInPandas. Pinned by test_plans.py.
+    "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+}
+
 
 def get_spark(
     app_name: str = "serverless-etl-aws-spark",
@@ -44,66 +102,14 @@ def get_spark(
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if cloud is None:
         cloud = os.environ.get("SPARK_GRAFT_CLOUD", "0") == "1"
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for k, v in _RUNTIME_SQL_CONFS.items():
+        builder = builder.config(k, v)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE's coalesce floor is 1 MiB of COMPRESSED shuffle bytes per
-        # partition (minPartitionSize) — at that floor a CPU-heavy stage
-        # over a few MB of shuffle (checksums, per-row expression work,
-        # percentile sorts) coalesces onto 1-3 cores and serializes
-        # (measured: ml_feature_screen ran its whole 2.4 s compute in a
-        # 3-task stage). 64 KiB keeps such stages at the session's
-        # parallelism; stages with ≥ cores×1 MiB of shuffle — every
-        # at-scale stage that matters — are unaffected because
-        # parallelismFirst sizing already spreads them.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
+        builder.config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.session.timeZone", "UTC")
-        # Same off-heap streaming-state posture as tune_for_session: the
-        # r13 adjudication moved stateful-stream state to RocksDB, but
-        # only the driver-handed-session path got the conf — sessions
-        # built HERE (bench.py, tests, CLI) silently kept the on-heap
-        # HDFS-backed provider, so the bench's stream keys ran a
-        # different engine than the driver's correctness runs. One
-        # default, both paths.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        .config("spark.sql.streaming.minBatchesToRetain", "2")
-        # Changelog checkpointing: per-batch commits upload the small
-        # change set instead of re-zipping the whole RocksDB snapshot
-        # (snapshots move to the background maintenance thread).
-        # Idle-box A/B at sf0.1: stream_stream_join 3.34→2.90,
-        # stream_late_data 2.00→1.68, stream_session 1.35→1.19,
-        # stream_tumbling 0.90→0.81, stream_stateful neutral (7-run
-        # medians) — and at scale per-commit cost stops growing with
-        # state size, which is the production argument.
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python UDTFs run row-at-a-time (BatchEvalPythonUDTF, pickled
-        # rows) unless the Arrow path is opted into — measured round 13:
-        # the flag flips udtf_python to ArrowEvalPythonUDTF with
-        # identical results (parity re-verified), putting the fourth
-        # Python API shape on the same Arrow-batch transport as
-        # pandas_udf/mapInPandas. Pinned by test_plans.py.
-        .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", os.path.join(os.getcwd(), "spark-warehouse"))
@@ -151,43 +157,10 @@ def ship_package(spark: SparkSession) -> None:
 
 
 def tune_for_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine defaults to an externally-provided
+    """Apply the engine's runtime SQL confs to an externally-provided
     session (the driver hands us its own SparkSession — static confs like
     driver memory can't change, but SQL confs can)."""
-    runtime = {
-        # streaming stateful ops pin their shuffle-partition count at
-        # checkpoint creation and AQE does not coalesce them — 200 tiny
-        # state tasks on a laptop-scale run is pure overhead
-        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        # same coalesce floor as get_spark (see comment there): without
-        # it CPU-heavy small-shuffle stages serialize onto 1-3 cores
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # Stateful streaming state lives OFF-HEAP in native RocksDB
-        # instead of on-heap HashMaps: the HDFS-backed provider's state
-        # maps made every stream key's wall time a GC barometer under a
-        # long session's accumulated heap pressure (r13 adjudication:
-        # stream_session escalated 4.9→16→21 s without an explicit
-        # System.gc between keys; with RocksDB the state no longer
-        # competes with the tenured heap). minBatchesToRetain is
-        # trimmed from 100: these drains are one-shot AvailableNow
-        # queries — nothing ever replays more than the last snapshot.
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        "spark.sql.streaming.minBatchesToRetain": "2",
-        # same changelog-checkpointing posture as get_spark (see comment
-        # there): commit the per-batch change set, snapshot in background
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
-        "spark.sql.parquet.filterPushdown": "true",
-    }
-    for k, v in runtime.items():
+    for k, v in _RUNTIME_SQL_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -1,4 +1,4 @@
-"""Degenerate-distribution drift sweeps — the round-9 siblings of
+r"""Degenerate-distribution drift sweeps — the round-9 siblings of
 tests/test_null_drift.py, one axis per fixture:
 
 * **constant measures** — every measure column pinned to one value, so

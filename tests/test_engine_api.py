@@ -240,3 +240,26 @@ def test_turkish_casing_hazard_is_real_and_engine_avoids_it(spark):
         "pre-uppercased — a lowercase value dies under a tr_TR JVM"
     )
     assert '"partitionOverwriteMode", "dynamic"' not in src
+
+
+def test_tune_for_session_applies_get_spark_runtime_confs(spark):
+    """A session handed in (the driver's, ``Engine(spark=...)``) plans
+    with the same runtime SQL confs as one ``get_spark`` builds: a session
+    that arrives with Spark's 10 MB broadcast threshold leaves
+    ``tune_for_session`` with ``get_spark``'s."""
+    from serverless_etl_aws_spark.session import tune_for_session
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.getAll
+    spark.conf.set(threshold, "10MB")
+    try:
+        tune_for_session(spark)
+        assert spark.conf.get(threshold) == str(64 * 1024 * 1024)
+    finally:
+        after = spark.conf.getAll
+        for k in after.keys() - before.keys():
+            spark.conf.unset(k)
+        for k, v in before.items():
+            if after.get(k) != v:
+                spark.conf.set(k, v)
+    assert spark.conf.getAll == before

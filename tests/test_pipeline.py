@@ -339,6 +339,27 @@ def test_rollup_refresh_guards_partition_cardinality(spark, tmp_path):
         roll.refresh_for_batch(batch)
 
 
+def test_rollup_upsert_guards_partition_cardinality(spark, tmp_path):
+    """upsert holds a delta to the same cap: 50 distinct values against
+    a cap of 10 raise before anything is read or written."""
+    import pytest
+
+    from serverless_etl_aws_spark.pipeline.rollup import PartitionedRollup
+
+    roll = PartitionedRollup(
+        spark,
+        silver_dir=str(tmp_path / "silver"),
+        gold_dir=str(tmp_path / "gold"),
+        partition_col="row_id",
+        aggregate=lambda df: df,
+        max_touched_partitions=10,
+    )
+    delta = spark.range(50).withColumnRenamed("id", "row_id")
+    with pytest.raises(ValueError, match="upsert: more than 10 distinct"):
+        roll.upsert(delta, merge=lambda df: df)
+    assert not roll.table.exists()
+
+
 def test_warehouse_export_round_trip(spark, tmp_path, sf_dir):
     """Gold rollup -> manifest export -> loader-side readback must be
     lossless, the manifest must enumerate every data file with sizes and

@@ -5,7 +5,8 @@ only when) the driving table's parquet layout cannot naturally feed the
 session's parallelism (row groups < defaultParallelism). At scale the
 gate disables it, so the exchange can never fire on data that is
 already parallel — asserted here with a fabricated multi-row-group
-file, driver-side, no cluster needed.
+file, driver-side, no cluster needed. Only the keys whose per-site A/B
+showed a wall win call it (the list is in the spread() docstring).
 """
 
 from __future__ import annotations
@@ -55,7 +56,7 @@ def test_natural_scan_tasks_remote_path_is_large_sentinel():
 def test_spread_repartitions_single_row_group_input(spark, sf_dir):
     df = _util.t(spark, sf_dir, "lineitem").select("l_orderkey")
     out = _util.spread(df, sf_dir, "lineitem")
-    # fixture is single-row-group → below local[32] parallelism → exchange
+    # fixture is single-row-group → below local[4] parallelism → exchange
     assert "roundrobin" in _plan(out).lower()
     assert out.count() == df.count()
 
@@ -88,3 +89,36 @@ def test_spread_gate_recomputes_after_fixture_regeneration(tmp_path):
     )
     os.utime(target, (1, 1))  # force a distinct mtime on coarse filesystems
     assert _util.natural_scan_tasks(str(tmp_path), "t") == 100
+
+
+#: Every key whose query called spread() before the per-site A/B at sf0.1
+MEASURED_KEYS = (
+    "agg_group", "agg_multi_distinct", "agg_abc_class", "llm_dedup_ngram",
+    "llm_dedup_minhash", "llm_dedup_cluster", "agg_stats", "dq_json_schema",
+    "ml_feature_screen", "llm_bpe_pairs", "join_range", "llm_dedup_editdist",
+    "llm_dedup_simhash", "llm_dedup_embedding", "llm_decontaminate",
+)
+#: The ones whose spread() won wall time there, and kept the call
+KEPT_KEYS = frozenset({
+    "llm_dedup_ngram", "llm_dedup_editdist", "llm_dedup_simhash",
+    "llm_dedup_embedding", "llm_decontaminate", "ml_feature_screen",
+    "llm_bpe_pairs", "join_range",
+})
+
+
+def test_only_kept_keys_reach_the_gate(spark, sf_dir, monkeypatch):
+    from serverless_etl_aws_spark.queries import build_registry
+
+    registry = build_registry()
+    real = _util.natural_scan_tasks
+    building, reached = [], set()
+
+    def recorder(sf_dir, name):
+        reached.add(building[-1])
+        return real(sf_dir, name)
+
+    monkeypatch.setattr(_util, "natural_scan_tasks", recorder)
+    for key in MEASURED_KEYS:
+        building.append(key)
+        registry[key].fn(spark, sf_dir)
+    assert reached == KEPT_KEYS
