@@ -7,6 +7,8 @@ Usage:
         [--month YYYY-MM]
     python -m serverless_etl_aws_spark sql --zone DIR "SELECT ..."
     python -m serverless_etl_aws_spark tables --zone DIR
+    python -m serverless_etl_aws_spark explain --zone DIR KEY_OR_SQL \
+        [--mode MODE] [--allow-side-effects]
 """
 
 from __future__ import annotations
@@ -31,32 +33,6 @@ def main(argv: list[str] | None = None) -> int:
 
     tables = sub.add_parser("tables", help="list known tables")
     tables.add_argument("--zone", required=True)
-
-    report = sub.add_parser(
-        "report",
-        help="write REPORT_r{N}.json: registry counts, live cross-engine "
-        "sweep, driver correctness/bench/scaling summaries",
-    )
-    report.add_argument(
-        "--round", type=int, default=None,
-        help="round number (default: latest driver CORRECTNESS round + 1)",
-    )
-    report.add_argument(
-        "--sweep-sf", default="/root/testdata/sf0.001",
-        help="fixture dir for the live cross-engine sweep",
-    )
-    report.add_argument(
-        "--no-sweep", action="store_true",
-        help="collate artifacts only; skip the live sweep (no JVM boot)",
-    )
-    report.add_argument(
-        "--driver-round", type=int, default=None,
-        help="pin which CORRECTNESS_r{N}.json the correctness_driver "
-        "block reads (default: latest on disk). Use to re-render round "
-        "N's report once the driver has written round N's rows — the "
-        "report is otherwise generated before they exist and lags one "
-        "round (VERDICT r10 #5)",
-    )
 
     explain = sub.add_parser(
         "explain",
@@ -85,28 +61,6 @@ def main(argv: list[str] | None = None) -> int:
 
         print("\n".join(sorted(schemas.TABLES)))
         return 0
-
-    if args.cmd == "report":
-        from .roundreport import write_report
-
-        path = write_report(
-            round_num=args.round,
-            sweep_sf=None if args.no_sweep else args.sweep_sf,
-            driver_round=args.driver_round,
-        )
-        with open(path) as f:
-            report = f.read()
-        print(report)
-        print(f"# written to {path}", file=sys.stderr)
-        swept = "sweep_local" in report
-        import json as _json
-
-        failures = []
-        rep = _json.loads(report)
-        if swept:
-            failures += rep["sweep_local"]["failures"]
-        failures += rep.get("correctness_driver", {}).get("failures", [])
-        return 1 if failures else 0
 
     from .engine import Engine
 

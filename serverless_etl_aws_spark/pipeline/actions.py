@@ -21,9 +21,31 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Any, Callable
 
 from .archive import archive_file
 from .ingest import seen_source_files
+
+
+def dispatch(event: dict, handlers: dict[str, Callable[[dict], Any]]) -> dict:
+    """The reference's Lambda protocol (s3_operations.py:97-115): route
+    ``event["action"]`` to its handler and wrap the reply in a
+    ``{statusCode, body}`` envelope — 200 with the handler's payload,
+    400 for an unknown action or a missing event field, 500 with the
+    error otherwise."""
+    action = event.get("action")
+    if not isinstance(action, str) or action not in handlers:
+        return _envelope(400, {"error": f"unknown action {action!r}"})
+    try:
+        return _envelope(200, handlers[action](event))
+    except KeyError as exc:
+        return _envelope(400, {"error": f"missing field {exc}"})
+    except Exception as exc:  # mirror the reference's error envelope
+        return _envelope(500, {"error": str(exc)})
+
+
+def _envelope(status: int, payload: Any) -> dict:
+    return {"statusCode": status, "body": json.dumps(payload)}
 
 
 class ActionDispatcher:
@@ -54,29 +76,17 @@ class ActionDispatcher:
 
     # -- protocol ----------------------------------------------------------
     def handle(self, event: dict) -> dict:
-        """Reference protocol: lambda_handler dispatch
-        (s3_operations.py:97-115), same ``{statusCode, body}`` envelope."""
-        action = event.get("action")
-        try:
-            if action == "get_unprocessed":
-                return self._ok({"files": self.get_unprocessed()})
-            if action == "mark_processed":
-                return self._ok(
-                    {
-                        "noop": True,
-                        "reason": "processing state is committed by the "
-                        "streaming checkpoint atomically with the write",
-                    }
-                )
-            if action == "archive":
-                return self._ok({"archived_to": self.archive(event["key"])})
-            return {
-                "statusCode": 400,
-                "body": json.dumps({"error": f"unknown action {action!r}"}),
-            }
-        except Exception as exc:  # mirror the reference's error envelope
-            return {"statusCode": 500, "body": json.dumps({"error": str(exc)})}
-
-    @staticmethod
-    def _ok(payload: dict) -> dict:
-        return {"statusCode": 200, "body": json.dumps(payload)}
+        return dispatch(
+            event,
+            {
+                "get_unprocessed": lambda e: {
+                    "files": self.get_unprocessed()
+                },
+                "mark_processed": lambda e: {
+                    "noop": True,
+                    "reason": "processing state is committed by the "
+                    "streaming checkpoint atomically with the write",
+                },
+                "archive": lambda e: {"archived_to": self.archive(e["key"])},
+            },
+        )

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from typing import Any
 
+from .actions import dispatch
+
 PROCESSED_TAG = "processed"  # reference: s3_operations.py:44 tag key
 
 
@@ -174,32 +176,20 @@ class S3ObjectStore:
 
     # -- event protocol (reference: s3_operations.py:97-115) ----------------
     def handle(self, event: dict) -> dict:
-        """The same ``{action: ...}`` → ``{statusCode, body}`` envelope
-        ActionDispatcher speaks for the local-FS engine — here each
-        action is executed against the real store."""
-        import json
+        """ActionDispatcher's envelope, each action executed against
+        the real store."""
 
-        action = event.get("action")
-        try:
-            if action == "get_unprocessed":
-                payload: Any = {
-                    "files": self.get_unprocessed(event.get("prefix", ""))
-                }
-            elif action == "mark_processed":
-                self.mark_processed(event["key"])
-                payload = {"marked": event["key"]}
-            elif action == "archive":
-                payload = {"archived_to": self.archive(event["key"])}
-            else:
-                return {
-                    "statusCode": 400,
-                    "body": json.dumps(
-                        {"error": f"unknown action {action!r}"}
-                    ),
-                }
-        except KeyError as exc:
-            return {
-                "statusCode": 400,
-                "body": json.dumps({"error": f"missing field {exc}"}),
-            }
-        return {"statusCode": 200, "body": json.dumps(payload)}
+        def mark(e: dict) -> dict:
+            self.mark_processed(e["key"])
+            return {"marked": e["key"]}
+
+        return dispatch(
+            event,
+            {
+                "get_unprocessed": lambda e: {
+                    "files": self.get_unprocessed(e.get("prefix", ""))
+                },
+                "mark_processed": mark,
+                "archive": lambda e: {"archived_to": self.archive(e["key"])},
+            },
+        )

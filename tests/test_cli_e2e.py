@@ -85,37 +85,3 @@ def test_cli_explain_refuses_eager_key(capsys):
     err = capsys.readouterr().err
     assert "side" in err.lower() or "executes" in err.lower(), err
 
-
-def test_report_command_collates_artifacts(tmp_path):
-    """`report --no-sweep` writes REPORT_r{N}.json from the repo
-    artifacts without booting a JVM; sections must be internally
-    consistent with the registry and the driver files."""
-    import json
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [
-            sys.executable, "-m", "serverless_etl_aws_spark",
-            "report", "--no-sweep", "--round", "99",
-        ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    path = "/root/repo/REPORT_r99.json"
-    try:
-        rep = json.loads(out.stdout)
-        assert rep["round"] == 99
-        assert rep["registry"]["n_keys"] >= 261
-        assert rep["registry"]["contract_2b_all_present"] is True
-        assert "sweep_local" not in rep  # --no-sweep honored
-        assert rep["correctness_driver"]["available"] is True
-        assert rep["correctness_driver"]["failures"] == []
-        with open(path) as f:
-            on_disk = json.load(f)
-        assert on_disk == rep
-    finally:
-        import os
-
-        if os.path.exists(path):
-            os.remove(path)

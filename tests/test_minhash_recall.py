@@ -26,13 +26,6 @@ from serverless_etl_aws_spark.operators.dedup import (
     trigrams,
 )
 
-# Registry keys this suite is the independent semantic oracle for —
-# minhash_banded_pairs IS llm_dedup_minhash's backend (queries/llm.py
-# delegates to it), so the recall contract here covers that key. A
-# code-level constant, not prose: roundreport._grepped_keys AST-matches
-# string constants in CODE only (docstring mentions don't count).
-COVERS = ("llm_dedup_minhash",)
-
 DIST_THRESHOLD = 0.5
 N_TABLES = 5
 ANALYTIC_MISS = (1 - (1 - DIST_THRESHOLD)) ** N_TABLES  # 0.03125

@@ -318,6 +318,36 @@ class TestActionDispatcher:
         assert r.files_processed == 2
         assert d.get_unprocessed() == []
 
+    def test_missing_field_and_handler_error_replies(self, tmp_path):
+        """An event without its required field, or with a malformed
+        action, is the caller's error (400, as the object store
+        answers); a failing handler is ours (500, with the error in the
+        body)."""
+        import json
+
+        from serverless_etl_aws_spark.pipeline.actions import (
+            ActionDispatcher,
+            dispatch,
+        )
+
+        d = ActionDispatcher(
+            str(tmp_path / "bronze"), str(tmp_path / "ckpt"),
+            str(tmp_path / "archive"),
+        )
+        resp = d.handle({"action": "archive"})
+        assert resp["statusCode"] == 400
+        assert json.loads(resp["body"]) == {"error": "missing field 'key'"}
+        assert d.handle({"action": ["archive"]})["statusCode"] == 400
+
+        def boom(event):
+            raise RuntimeError("store unreachable")
+
+        resp = dispatch({"action": "get"}, {"get": boom})
+        assert resp == {
+            "statusCode": 500,
+            "body": json.dumps({"error": "store unreachable"}),
+        }
+
 
 def test_rollup_refresh_guards_partition_cardinality(spark, tmp_path):
     """A high-cardinality 'partition' column must fail loudly instead of

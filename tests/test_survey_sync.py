@@ -8,15 +8,22 @@ missing" #3). This test makes staleness a loud local failure:
   actual SQL/rows-only split;
 - every registry key must be mentioned in §8 (coverage lists / extension
   table), so a new wave cannot land without its doc row.
+
+The same goes for the other evidence the repo keeps beside the code:
+docs/SCALING.md rows, rows-only bound tests, the newest driver
+correctness file, and the paths README.md and ARCHITECTURE.md point at.
 """
 
 from __future__ import annotations
 
+import json
 import re
+from pathlib import Path
 
 import pytest
 
-SURVEY = "/root/repo/SURVEY.md"
+ROOT = Path(__file__).resolve().parent.parent
+SURVEY = ROOT / "SURVEY.md"
 
 
 @pytest.fixture(scope="module")
@@ -68,33 +75,14 @@ def test_every_registry_key_appears_in_section8(registry, section8):
     )
 
 
-def test_formula_keys_not_local_only():
-    """Every formula-bearing key (ml_/ts_/dq_/graph_ families) must
-    carry evidence beyond the DuckDB oracle — a formula can be wrong
-    identically in both engines, so these all have an independent
-    semantic oracle, a driver hash row, a plan test, or a scaling row
-    (VERDICT r8 directive #3)."""
-    from serverless_etl_aws_spark.roundreport import matrix_section
-
-    m = matrix_section("/root/repo")
-    assert m["formula_local_only"] == [], (
-        f"formula-bearing keys with local-oracle-only coverage: "
-        f"{m['formula_local_only']} — add a semantic oracle in "
-        f"tests/test_semantic_oracle.py"
-    )
-
-
 def test_scaling_md_covers_every_key():
     """docs/SCALING.md must mention every registry key exactly once-or-
     more (VERDICT r8 directive #4: absence must be a recorded
     classification, not an omission)."""
-    import re as _re
-
     from serverless_etl_aws_spark.queries import build_registry
 
-    with open("/root/repo/docs/SCALING.md") as f:
-        text = f.read()
-    mentioned = set(_re.findall(r"`([a-z0-9_]+)`", text))
+    text = (ROOT / "docs" / "SCALING.md").read_text(encoding="utf-8")
+    mentioned = set(re.findall(r"`([a-z0-9_]+)`", text))
     missing = sorted(set(build_registry()) - mentioned)
     assert not missing, (
         f"registry keys absent from docs/SCALING.md: {missing} — add a "
@@ -102,50 +90,76 @@ def test_scaling_md_covers_every_key():
     )
 
 
-def test_evidence_md_matches_live_matrix():
-    """docs/EVIDENCE.md is the generated human-readable render of the
-    per-key verification matrix (VERDICT r9 directive #7) — pin it
-    against a fresh render so registry or test-coverage drift makes the
-    doc a loud local failure, the same way SCALING.md coverage is
-    pinned. The render is re-bounded to the driver rounds recorded in
-    the file's own header, so the pin survives the driver writing the
-    NEXT round's CORRECTNESS file after the session (the one artifact
-    that legitimately appears between generation and review)."""
-    import re as _re
-
-    from serverless_etl_aws_spark.roundreport import render_evidence_md
-
-    with open("/root/repo/docs/EVIDENCE.md") as f:
-        on_disk = f.read()
-    m = _re.search(r"Generated from driver rounds <= (\d+)\.", on_disk)
-    assert m, "EVIDENCE.md lost its generation-bound header"
-    assert on_disk == render_evidence_md(
-        "/root/repo", max_round=int(m.group(1))
-    ), (
-        "docs/EVIDENCE.md is stale — regenerate with "
-        "`python -c 'from serverless_etl_aws_spark.roundreport import "
-        "write_evidence_md; write_evidence_md()'` (or the report command)"
-    )
-
-
 def test_rows_only_bound_test_mapping_is_complete(registry):
-    """VERDICT r10 directive #6: every rows-only key (registry sql=None)
-    must name the pytest that pins its tolerance/recall bound in
-    roundreport.ROWS_ONLY_BOUND_TESTS (rendered as EVIDENCE.md's
-    'bound test' column), and each named test must exist on disk — so
-    'no oracle' never silently reads as 'no evidence'."""
-    from serverless_etl_aws_spark.roundreport import ROWS_ONLY_BOUND_TESTS
-
+    """Every rows-only key (registry sql=None, approximate by the §2B
+    contract) names the pytest that pins its tolerance/recall bound, and
+    each named test exists on disk — so "no oracle" never silently reads
+    as "no evidence"."""
+    bound_tests = {
+        "agg_approx_distinct": (
+            "tests/test_operators.py::"
+            "test_approx_distinct_within_hll_error_bound"
+        ),
+        "agg_sketch_merge": (
+            "tests/test_operators.py::test_sketch_merge_estimates_match_exact"
+        ),
+        "llm_dedup_minhash": (
+            "tests/test_minhash_recall.py::"
+            "test_banded_minhash_recall_meets_analytic_bound"
+        ),
+        "llm_sim_search_ivf": "tests/test_operators.py::test_ivf_recall_fixture",
+        "llm_sim_search_pq": "tests/test_operators.py::test_pq_recall_fixture",
+    }
     rows_only = {k for k, q in registry.items() if q.sql is None}
-    assert set(ROWS_ONLY_BOUND_TESTS) == rows_only, (
+    assert set(bound_tests) == rows_only, (
         f"bound-test mapping drifted from the live registry: "
-        f"mapping={sorted(ROWS_ONLY_BOUND_TESTS)} rows_only={sorted(rows_only)}"
+        f"mapping={sorted(bound_tests)} rows_only={sorted(rows_only)}"
     )
-    for key, nodeid in ROWS_ONLY_BOUND_TESTS.items():
+    for key, nodeid in bound_tests.items():
         path, _, testname = nodeid.partition("::")
-        assert testname, f"{key}: bound test '{nodeid}' lacks ::testname"
-        with open(f"/root/repo/{path}", encoding="utf-8") as fh:
-            src = fh.read()
-        assert f"def {testname.split('[')[0]}(" in src, (
+        src = (ROOT / path).read_text(encoding="utf-8")
+        assert f"def {testname}(" in src, (
             f"{key}: pinned bound test {nodeid} not found on disk"
         )
+
+
+def test_latest_driver_correctness_has_no_failures():
+    """The newest driver CORRECTNESS_r{N}.json lists no failing key: a
+    row fails on an error other than "no_oracle" or on a row-count or
+    hash mismatch."""
+    files = {
+        int(m.group(1)): path
+        for path in ROOT.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name))
+    }
+    assert files, "no driver CORRECTNESS_r*.json at the repo root"
+    latest = files[max(files)]
+    rows = json.loads(latest.read_text())
+    failures = sorted(
+        k
+        for k, v in rows.items()
+        if v.get("err") not in (None, "no_oracle")
+        or v.get("hash_match") is False
+        or v.get("rows_match") is False
+    )
+    assert not failures, f"{latest.name} lists failing keys: {failures}"
+
+
+def test_doc_path_pointers_exist():
+    """Every backticked docs/, tools/, perfbench/ or tests/ path in
+    README.md and ARCHITECTURE.md exists on disk (for a pytest node id,
+    the file before ``::``)."""
+    refs = {
+        (doc, ref)
+        for doc in ("README.md", "ARCHITECTURE.md")
+        for ref in re.findall(
+            r"`((?:docs|tools|perfbench|tests)/[^`\s]+)`",
+            (ROOT / doc).read_text(encoding="utf-8"),
+        )
+    }
+    assert refs, "no path pointers found; the pattern has drifted"
+    dangling = sorted(
+        (doc, ref) for doc, ref in refs
+        if not (ROOT / ref.partition("::")[0]).exists()
+    )
+    assert not dangling, f"doc pointers to missing paths: {dangling}"
