@@ -13,15 +13,23 @@ only after the write lands).
 commit protocol (the Iceberg/Delta idea, reduced to its minimum):
 
 - Data files live in immutable snapshot directories
-  ``<root>/data/snap=N/<pcol>=<value>/part-*.parquet``. A snapshot only
-  ever holds the partitions written by commit ``N``; it is never mutated.
+  ``<root>/data/snap=N/part-*.parquet``. A snapshot only ever holds the
+  rows written by commit ``N``; it is never mutated. A commit writes its
+  frame sorted within each write task by ``partition_col`` and NOT
+  ``partitionBy`` it: one file per write task (at most
+  ``MAX_RECORDS_PER_FILE`` rows each), not one directory per value, and
+  each file's footer min/max on the column still prunes by value.
 - The table's current state is the highest-numbered COMPLETE manifest
-  ``<root>/_manifests/manifest-N.json`` mapping each live partition
-  directory name to the snapshot that owns it (``partitions``), plus how
-  many partition dirs each still-live snapshot wrote (``snapshots``,
-  ``{"N": k}``). A commit records its own snapshot's count and carries
-  forward the entries of every snapshot that still owns a live
-  partition; entries of fully superseded snapshots are dropped.
+  ``<root>/_manifests/manifest-N.json``. It maps each live partition key
+  (``partition_dir_name``: ``<pcol>=<Hive-escaped value>``) to the
+  snapshot that owns it (``partitions``), records how many keys each
+  still-live snapshot wrote (``snapshots``, ``{"N": k}``), the layout of
+  each live snapshot (``layouts``, ``{"N": "rows"}``) and the schema of
+  the last committed frame (``schema``). A commit takes its keys from an
+  ``Observation`` riding its write (the set of values cast to string,
+  plus a NULL flag), never from a listing, and carries forward the
+  entries of every snapshot that still owns a live key; entries of
+  fully superseded snapshots are dropped.
 - A commit writes its snapshot data fully, then publishes the new
   manifest by writing a temp file and atomically PUT-if-absent-ing it
   to its final never-before-used name: ``link(2)`` on local
@@ -36,22 +44,23 @@ commit protocol (the Iceberg/Delta idea, reduced to its minimum):
 - Replaying a failed commit just writes the next snapshot number; orphan
   snapshots are ignored by readers and reaped by :meth:`vacuum`.
 
-Readers reconstruct the table with one multi-path parquet scan using
-``basePath=<root>/data`` so both the ``snap`` and user partition columns
-are recovered by standard partition discovery — ``snap`` is dropped, and
-partition pruning/pushdown still work on the discovered values. The scan
-gets one root per live snapshot where it can: ``data/snap=N`` when every
-partition dir snapshot N wrote is still live (its ``snapshots`` count
-equals its live partitions), and per-partition paths only for a snapshot
-a later commit partly superseded. Both cover the same leaf dirs, so rows
-and inferred types do not depend on the choice; the number of roots does.
-Spark lists more than ``parallelPartitionDiscovery.threshold`` (32) roots,
-or more than 32 subdirs of one root, with a Spark job, so a table whose
-commits each write at most 32 partitions (one month of days) is now
-planned without one. A manifest written before ``snapshots`` existed has
-no such field and reads with one path per partition, as it always did; a
-commit on top of it records only its own snapshot's count, so the older
-snapshots keep the per-partition read until they are superseded.
+Readers reconstruct the table with one parquet scan over the
+``data/snap=N`` root of every live snapshot, given the manifest's schema
+(so no footer-inference job runs) and ``basePath=<root>/data`` (so the
+``snap`` column is recovered from the path, then dropped). A snapshot a
+later commit partly superseded adds ``snap = N AND CAST(pcol AS STRING)
+IN (its live keys)`` (with an ``isNull`` arm for the NULL key) to the
+scan's filter. The roots number the live snapshots, not the values, so
+Spark lists them on the driver unless more than
+``parallelPartitionDiscovery.threshold`` (32) snapshots are live.
+
+Tables written before the rows layout stored one directory per value
+(``data/snap=N/<pcol>=<value>/``) and have no ``layouts`` entry for
+those snapshots. They keep their read: one root per fully-live snapshot
+and one path per partition for a partly superseded one (all of them
+under a manifest without ``snapshots``), with partition discovery typing
+the column (or the manifest's schema, once a rows commit wrote one). A
+table holding both layouts reads as the union of the two scans.
 
 All metadata I/O goes through the Hadoop FileSystem API so
 the table can live on any supported scheme (file:, hdfs:, s3a: — with the
@@ -70,17 +79,43 @@ from __future__ import annotations
 import json
 import os
 import time
+import urllib.parse
 import uuid
 from collections import Counter
 from collections.abc import Callable
+from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .ingest import MAX_RECORDS_PER_FILE
+
+#: Layout tag a manifest records for a snapshot written as rows (one
+#: file per write task). A live snapshot without one is in the directory
+#: layout (one ``<pcol>=<value>/`` directory per value).
+ROWS = "rows"
 
 #: Fault-injection hook: called with a stage name at the commit protocol's
 #: observable points ("staged" = snapshot data fully written, manifest not
 #: yet published; "published" = manifest renamed into place). Tests raise
 #: from these to simulate a crash at the worst moment.
 FaultHook = Callable[[str], None]
+
+
+def partition_predicate(col: Column, values: list) -> Column:
+    """Membership predicate that honors a NULL partition value:
+    ``isin`` never matches NULL, so a value list containing ``None``
+    (e.g. a null event date) must add an explicit ``isNull`` arm —
+    otherwise the null-partition slice is silently excluded (from a
+    rollup merge, or from a partly superseded snapshot's read) while
+    the commit still replaces the NULL key."""
+    non_null = [v for v in values if v is not None]
+    pred = col.isin(non_null) if non_null else F.lit(False)
+    if any(v is None for v in values):
+        pred = pred | col.isNull()
+    return pred
 
 
 class UnsafeFilesystemError(RuntimeError):
@@ -94,6 +129,22 @@ class CommitConflict(RuntimeError):
     """A manifest publish lost its rename race. Raised to the caller only
     after MAX_PUBLISH_RETRIES failed attempts; internally it drives the
     optimistic retry loop."""
+
+
+@dataclass
+class Manifest:
+    """One published manifest, parsed. Every field is empty for an
+    empty table."""
+
+    #: partition key (``partition_dir_name``) → owning snapshot
+    partitions: dict[str, int] = field(default_factory=dict)
+    #: live snapshot → keys it wrote (empty under a manifest written
+    #: before the field existed: none of its snapshots reads as whole)
+    snapshots: dict[int, int] = field(default_factory=dict)
+    #: live snapshot → layout tag (:data:`ROWS`); absent = directories
+    layouts: dict[int, str] = field(default_factory=dict)
+    #: schema of the last committed frame (None before the rows layout)
+    schema: StructType | None = None
 
 
 class AtomicPartitionedTable:
@@ -334,17 +385,12 @@ class AtomicPartitionedTable:
     def exists(self) -> bool:
         return self.current_version() > 0
 
-    def _manifest(
-        self, version: int | None = None
-    ) -> tuple[dict[str, int], dict[int, int]]:
-        """Partition-dir-name → owning-snapshot mapping for ``version``
-        (default: current), and snapshot → partition dirs it wrote for
-        every live snapshot (empty for a manifest written before that
-        field existed: none of its snapshots reads as whole). Empty
-        table → empty mappings."""
+    def _manifest(self, version: int | None = None) -> Manifest:
+        """The manifest of ``version`` (default: current); an empty
+        :class:`Manifest` for an empty table."""
         v = self.current_version() if version is None else version
         if v == 0:
-            return {}, {}
+            return Manifest()
         if version is not None and not self._fs().exists(
             self._jpath(self.MANIFEST_DIR, f"manifest-{v}.json")
         ):
@@ -352,43 +398,70 @@ class AtomicPartitionedTable:
                 f"atomic table {self.root} has no manifest for version {v} "
                 f"(never committed, or expired by vacuum)"
             )
-        text = self._read_small_file(
+        doc = json.loads(self._read_small_file(
             self._jpath(self.MANIFEST_DIR, f"manifest-{v}.json")
+        ))
+        schema = doc.get("schema")
+        return Manifest(
+            partitions={str(k): int(s) for k, s in doc["partitions"].items()},
+            snapshots={
+                int(s): int(k) for s, k in doc.get("snapshots", {}).items()
+            },
+            layouts={int(s): t for s, t in doc.get("layouts", {}).items()},
+            schema=None if schema is None else StructType.fromJson(schema),
         )
-        doc = json.loads(text)
-        mapping = {str(k): int(s) for k, s in doc["partitions"].items()}
-        wrote = {int(s): int(k) for s, k in doc.get("snapshots", {}).items()}
-        return mapping, wrote
 
     def current_partition_paths(
         self, version: int | None = None
     ) -> dict[str, str]:
-        """Live partition dir name → absolute data path (for consumers
-        that need file-level introspection, e.g. tests asserting untouched
-        partitions were not rewritten). ``version`` pins a historical
-        manifest (time travel)."""
+        """Live partition key → the directory that holds its rows: the
+        snapshot dir (``.../snap=N/``) under the rows layout, the key's
+        own dir (``.../snap=N/<key>``) under the directory layout. For
+        consumers that need file-level introspection, e.g. tests
+        asserting untouched partitions were not rewritten. ``version``
+        pins a historical manifest (time travel)."""
+        m = self._manifest(version)
+        data = f"{self.root}/{self.DATA_DIR}"
         return {
-            name: f"{self.root}/{self.DATA_DIR}/snap={snap}/{name}"
-            for name, snap in self._manifest(version)[0].items()
+            key: f"{data}/snap={snap}/"
+            + ("" if m.layouts.get(snap) == ROWS else key)
+            for key, snap in m.partitions.items()
         }
 
-    def scan_roots(self, version: int | None = None) -> list[str]:
-        """The paths :meth:`read` hands to its one parquet scan: the
-        snapshot dir of every snapshot whose written partitions are all
-        still live, and the partition dirs of every other live snapshot
-        (all of them, for a manifest without ``snapshots``)."""
-        mapping, wrote = self._manifest(version)
-        live = Counter(mapping.values())
+    def _dir_layout_roots(self, m: Manifest) -> list[str]:
+        """Scan paths of the directory-layout snapshots: the snapshot dir
+        of each one whose written partitions are all still live, and the
+        partition dirs of every other one."""
+        live = Counter(m.partitions.values())
         data = f"{self.root}/{self.DATA_DIR}"
-        whole = {snap for snap, n in live.items() if wrote.get(snap) == n}
+        dirs = {s for s in live if m.layouts.get(s) != ROWS}
+        whole = {s for s in dirs if m.snapshots.get(s) == live[s]}
         return sorted(
             [f"{data}/snap={snap}" for snap in whole]
             + [
-                f"{data}/snap={snap}/{name}"
-                for name, snap in mapping.items()
-                if snap not in whole
+                f"{data}/snap={snap}/{key}"
+                for key, snap in m.partitions.items()
+                if snap in dirs and snap not in whole
             ]
         )
+
+    def scan_roots(self, version: int | None = None) -> list[str]:
+        """Every path :meth:`read` scans: the ``data/snap=N`` dir of each
+        live rows-layout snapshot, and the directory-layout roots (see
+        the module docstring)."""
+        m = self._manifest(version)
+        data = f"{self.root}/{self.DATA_DIR}"
+        rows = {s for s in m.partitions.values() if m.layouts.get(s) == ROWS}
+        return sorted(
+            [f"{data}/snap={s}" for s in rows] + self._dir_layout_roots(m)
+        )
+
+    def _key_value(self, key: str) -> str | None:
+        """The value (as Spark casts it to string) a manifest key names:
+        the inverse of :meth:`partition_dir_name`."""
+        if key == self.partition_dir_name(None):
+            return None
+        return urllib.parse.unquote(key[len(self.partition_col) + 1:])
 
     # ------------------------------------------------------------------
     # Read / commit / vacuum
@@ -398,10 +471,14 @@ class AtomicPartitionedTable:
         version: int | None = None,
         empty_schema=None,
     ) -> DataFrame:
-        """One multi-path parquet scan of the live partitions, one root
-        per live snapshot where it can (:meth:`scan_roots`). basePath
-        recovers ``snap`` and the user partition column via standard
-        partition discovery; ``snap`` is dropped.
+        """The live rows, ``partition_col`` last. Rows-layout snapshots
+        are one parquet scan given the manifest's schema, so the column
+        keeps the type it was written with and no footer-inference or
+        listing job runs; a partly superseded snapshot is filtered to its
+        live keys. Directory-layout snapshots (tables written before the
+        rows layout) read by partition discovery over
+        :meth:`_dir_layout_roots`; a table holding both layouts reads as
+        the union of the two scans.
 
         ``version`` reads the table AS OF that commit (time travel):
         manifests are immutable and snapshots are append-only, so any
@@ -411,13 +488,20 @@ class AtomicPartitionedTable:
         ``empty_schema`` (a StructType or DDL string): when given, a
         table with no live partitions — never committed, or every
         partition dropped — reads as an EMPTY DataFrame of that schema
-        instead of raising. A pipeline whose incremental run saw zero
-        input rows is a legitimate state, not an error; the caller
-        supplies the schema because an empty table can't know it."""
-        paths = self.scan_roots(version)
-        if not paths and empty_schema is not None and version is None:
-            return self.spark.createDataFrame([], empty_schema)
-        if not paths:
+        instead of raising, ``partition_col`` last as in every read. A
+        pipeline whose incremental run saw zero input rows is a
+        legitimate state, not an error; the caller supplies the schema
+        because an empty table can't know it."""
+        m = self._manifest(version)
+        if not m.partitions and empty_schema is not None and version is None:
+            empty = self.spark.createDataFrame([], empty_schema)
+            if self.partition_col not in empty.columns:
+                return empty
+            return empty.select(
+                *[c for c in empty.columns if c != self.partition_col],
+                self.partition_col,
+            )
+        if not m.partitions:
             # distinguish "never committed" (schema unknowable — caller
             # bug) from "committed but currently empty" (every partition
             # dropped — a legitimate state a caller may want to handle)
@@ -428,11 +512,39 @@ class AtomicPartitionedTable:
                 + (f" at version {version}" if version is not None else "")
             )
             raise FileNotFoundError(f"atomic table {self.root} {state}")
-        return (
-            self.spark.read.option("basePath", f"{self.root}/{self.DATA_DIR}")
-            .parquet(*paths)
-            .drop("snap")
-        )
+        data = f"{self.root}/{self.DATA_DIR}"
+        reader = self.spark.read.option("basePath", data)
+        if m.schema is not None:
+            pcol = m.schema[self.partition_col]
+            reader = reader.schema(StructType(
+                [f for f in m.schema.fields if f.name != pcol.name] + [pcol]
+            ))
+        scans = []
+        live = Counter(m.partitions.values())
+        rows = sorted(s for s in live if m.layouts.get(s) == ROWS)
+        if rows:
+            scan = reader.parquet(*[f"{data}/snap={s}" for s in rows])
+            partial = [s for s in rows if m.snapshots.get(s) != live[s]]
+            if partial:
+                keep = F.col("snap").isin(
+                    [s for s in rows if s not in partial]
+                )
+                key_str = F.col(self.partition_col).cast("string")
+                for s in partial:
+                    keep = keep | (F.col("snap") == s) & partition_predicate(
+                        key_str,
+                        [
+                            self._key_value(k)
+                            for k, owner in m.partitions.items()
+                            if owner == s
+                        ],
+                    )
+                scan = scan.filter(keep)
+            scans.append(scan)
+        dir_roots = self._dir_layout_roots(m)
+        if dir_roots:
+            scans.append(reader.parquet(*dir_roots))
+        return reduce(DataFrame.unionByName, scans).drop("snap")
 
     RESERVE_PREFIX = ".reserved-snap-"
 
@@ -484,18 +596,19 @@ class AtomicPartitionedTable:
     _HIVE_ESCAPED = set('"#%\'*/:=?\\\x7f{[]^')
 
     def partition_dir_name(self, value) -> str:
-        """The hive-style directory name Spark writes for a partition
-        value — the key used in the manifest mapping. Mirrors Spark's
-        escapePathName so ``replaced`` values round-trip for strings
-        with special characters and for NULL.
+        """The manifest key of a partition value: the hive-style
+        directory name a ``partitionBy`` write gives it (the directory
+        layout's dir names are the keys, so one key space covers both
+        layouts). Mirrors Spark's escapePathName so ``replaced`` values
+        round-trip for strings with special characters and for NULL.
 
         Only None, int, and str values are accepted: Python's str() of
         bool/float/datetime diverges from Spark's Cast-to-string
         rendering ('True' vs 'true', precision, timestamp format), which
         would make the manifest pop a silent no-op and leave the very
         stale partition ``replaced`` exists to prevent. Callers with
-        such partition types must pre-render the value exactly as the
-        written directory shows it."""
+        such partition types must pre-render the value exactly as Spark
+        casts it to string."""
         if value is None:
             return f"{self.partition_col}=__HIVE_DEFAULT_PARTITION__"
         if isinstance(value, bool) or not isinstance(value, (int, str)):
@@ -504,13 +617,42 @@ class AtomicPartitionedTable:
                 f"None/int/str round-trip Spark's partition-dir rendering "
                 f"exactly; pass the directory's value string instead"
             )
+        return self._key(str(value))
+
+    def _key(self, text: str) -> str:
+        """The manifest key of a value rendered as ``text``."""
         escaped = "".join(
             f"%{ord(c):02X}"
             if c in self._HIVE_ESCAPED or ord(c) < 0x20
             else c
-            for c in str(value)
+            for c in text
         )
         return f"{self.partition_col}={escaped}"
+
+    def _write_snapshot(self, df: DataFrame, path: str) -> list[str]:
+        """Write ``df``'s rows into the snapshot dir ``path``, clustered
+        by ``partition_col`` within each write task, and return the keys
+        of the values written. The keys ride the write as an Observation:
+        the set of values cast to string (Spark's rendering, the same
+        ``Cast`` a ``partitionBy`` dir name uses) and a NULL flag, since
+        ``collect_set`` drops NULLs."""
+        obs = Observation()
+        col = F.col(self.partition_col)
+        (
+            df.sortWithinPartitions(self.partition_col)
+            .observe(
+                obs,
+                F.collect_set(col.cast("string")).alias("keys"),
+                F.bool_or(col.isNull()).alias("has_null"),
+            )
+            .write.mode("errorifexists")
+            .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+            .parquet(path)
+        )
+        got = obs.get
+        return [self._key(v) for v in got["keys"]] + (
+            [self.partition_dir_name(None)] if got["has_null"] else []
+        )
 
     def commit_overwrite_partitions(
         self,
@@ -539,7 +681,7 @@ class AtomicPartitionedTable:
         readers; N is unique — a racing writer that picks the same N
         fails the errorifexists data write), then publish a manifest
         whose VERSION is chosen at publish time: read the current
-        mapping, apply the drops and this snapshot's dirs, and rename a
+        mapping, apply the drops and this snapshot's keys, and rename a
         temp file to ``manifest-<current+1>.json``. The rename-to-fresh-
         path is the atomic commit point; if a concurrent writer won that
         version number, the rename fails and the publish RETRIES against
@@ -559,18 +701,9 @@ class AtomicPartitionedTable:
             )
         self.check_commit_safety()
         snap = self._reserve_snapshot()
-        snap_rel = f"{self.DATA_DIR}/snap={snap}"
-        (
-            df.write.mode("errorifexists")
-            .partitionBy(self.partition_col)
-            .parquet(f"{self.root}/{snap_rel}")
+        written = self._write_snapshot(
+            df, f"{self.root}/{self.DATA_DIR}/snap={snap}"
         )
-        prefix = f"{self.partition_col}="
-        written = [
-            name
-            for name in self._list_names(snap_rel)
-            if name.startswith(prefix)
-        ]
         # the snap dir itself now guards the id; the reservation marker
         # has done its job (a crash before this point leaves it for
         # vacuum to reap)
@@ -582,13 +715,15 @@ class AtomicPartitionedTable:
             fault("staged")
         for _attempt in range(self.MAX_PUBLISH_RETRIES):
             base_version = self.current_version()
-            mapping, wrote = self._manifest(None)
+            m = self._manifest(None)
+            mapping = m.partitions
             if replaced is not None:
                 for value in replaced:
                     mapping.pop(self.partition_dir_name(value), None)
             for name in written:
                 mapping[name] = snap
-            wrote = {**wrote, snap: len(written)}
+            wrote = {**m.snapshots, snap: len(written)}
+            layouts = {**m.layouts, snap: ROWS}
             live = set(mapping.values())
             version = base_version + 1
             manifest = {
@@ -599,6 +734,10 @@ class AtomicPartitionedTable:
                 "snapshots": {
                     str(s): n for s, n in wrote.items() if s in live
                 },
+                "layouts": {
+                    str(s): t for s, t in layouts.items() if s in live
+                },
+                "schema": df.schema.jsonValue(),
             }
             try:
                 self._write_file_atomic(
@@ -652,7 +791,7 @@ class AtomicPartitionedTable:
         cutoff_ms = (time.time() - grace) * 1000.0
         fs = self._fs()
         current = self.current_version()
-        live_snaps = set(self._manifest()[0].values())
+        live_snaps = set(self._manifest().partitions.values())
         removed = 0
         data_path = self._jpath(self.DATA_DIR)
         statuses = fs.listStatus(data_path) if fs.exists(data_path) else []

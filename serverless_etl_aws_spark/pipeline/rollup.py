@@ -27,21 +27,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .atomic import AtomicPartitionedTable, FaultHook
-
-
-def _partition_predicate(col_name: str, values: list):
-    """Membership predicate that honors a NULL partition value:
-    ``isin`` never matches NULL, so a touched list containing ``None``
-    (e.g. a null event date) must add an explicit ``isNull`` arm —
-    otherwise the existing null-partition slice is silently excluded
-    from a merge while dynamic overwrite still rewrites
-    ``__HIVE_DEFAULT_PARTITION__`` underneath it."""
-    non_null = [v for v in values if v is not None]
-    pred = F.col(col_name).isin(non_null) if non_null else F.lit(False)
-    if any(v is None for v in values):
-        pred = pred | F.col(col_name).isNull()
-    return pred
+from .atomic import AtomicPartitionedTable, FaultHook, partition_predicate
 
 
 class PartitionedRollup:
@@ -79,19 +65,17 @@ class PartitionedRollup:
         """Recompute the given gold partitions from silver and atomically
         replace exactly those (snapshot + manifest commit).
 
-        The recomputed slice is coalesced before the write: its size is
-        bounded by construction (≤ ``max_touched_partitions`` partitions ×
-        the aggregate's group cardinality — aggregate rows, not fact rows),
-        and without the coalesce every post-AQE output task writes a file
-        into every touched partition dir, so files ≈ tasks × partitions.
-        ``write_tasks`` scales the writer count with the touched-partition
-        count (1 task per 32 partitions) rather than pinning 1, so a wide
-        backfill (say 10k partitions) still writes in parallel."""
+        The recomputed slice is aggregate rows, not fact rows: at most
+        ``max_touched_partitions`` values × the aggregate's group
+        cardinality. :meth:`_write_gold` sizes the commit's write tasks,
+        and so its files, by the touched-value count."""
         if not values:
             return 0
         silver = self.spark.read.parquet(self.silver_dir)
         gold = self.aggregate(
-            silver.filter(_partition_predicate(self.partition_col, values))
+            silver.filter(
+                partition_predicate(F.col(self.partition_col), values)
+            )
         )
         self._write_gold(gold, values, fault)
         return len(values)
@@ -103,14 +87,15 @@ class PartitionedRollup:
         fault: FaultHook | None = None,
     ) -> None:
         """Crash-atomically replace the touched gold partitions (snapshot
-        + manifest rename, see AtomicPartitionedTable), coalesced to ~1
-        writer task per 32 touched partitions (the slice is
-        aggregate-sized by construction; without the coalesce files ≈
-        tasks × partitions). The touched values are handed to the commit
-        as its ``replaced`` set, so a refresh whose recompute yields NO
-        rows for a touched partition (every silver row for that day was
-        deleted) empties the gold partition instead of leaving it
-        stale."""
+        + manifest rename, see AtomicPartitionedTable). A commit writes
+        one file per write task, so the coalesce to one task per 32
+        touched values bounds the files: a month's refresh writes one
+        file, not one per post-shuffle task of the aggregate, and a wide
+        backfill (10k values) still writes in parallel. The touched
+        values are handed to the commit as its ``replaced`` set, so a
+        refresh whose recompute yields NO rows for a touched partition
+        (every silver row for that day was deleted) empties the gold
+        partition instead of leaving it stale."""
         self.table.commit_overwrite_partitions(
             gold.coalesce(max(1, len(touched_values) // 32)),
             fault=fault,
@@ -212,7 +197,7 @@ class PartitionedRollup:
             # the write completes, so the scan and the commit never touch
             # the same files (snapshot isolation from the atomic table).
             existing = self.read_gold().filter(
-                _partition_predicate(self.partition_col, touched)
+                partition_predicate(F.col(self.partition_col), touched)
             )
             both = existing.unionByName(delta_gold)
         else:

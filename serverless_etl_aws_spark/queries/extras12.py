@@ -340,7 +340,7 @@ def maintenance_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is then a no-op over zero rows, not an error
     state = table.read(
         empty_schema="event_id bigint, user_id bigint, "
-        "event_type string, value double, ts timestamp, bucket int"
+        "event_type string, value double, ts timestamp, bucket bigint"
     )
     n_buckets = 16  # must match the bucket expression above
     touched = [
@@ -372,7 +372,7 @@ def maintenance_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows, which are none
     state = table.read(
         empty_schema="event_id bigint, user_id bigint, "
-        "event_type string, value double, ts timestamp, bucket int"
+        "event_type string, value double, ts timestamp, bucket bigint"
     )
     return state.select(
         "event_id",

@@ -195,8 +195,10 @@ def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         post_batch=rollup.refresh_for_batch,
     )
     pipe.run_once()
+    # event_date is a date: gold is aggregated from the silver read, whose
+    # partition discovery types the yyyy-MM-dd directory names as dates
     return rollup.read_gold(
-        empty_schema="event_date string, event_type string, "
+        empty_schema="event_date date, event_type string, "
         "event_count bigint, sum_value double"
     ).select("event_date", "event_type", "event_count", "sum_value")
 

@@ -477,7 +477,7 @@ def stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing is nothing
     state = state_table.read(
         empty_schema="user_id bigint, op string, value double, "
-        "ts timestamp, event_id bigint, bucket int"
+        "ts timestamp, event_id bigint, bucket bigint"
     )
     return state.filter(F.col("op") != "d").select(
         "user_id",

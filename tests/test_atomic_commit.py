@@ -10,6 +10,7 @@ commit must converge to exactly the state a crash-free run produces.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -45,6 +46,58 @@ def table(spark, tmp_path):
 
 def df_of(spark, rows):
     return spark.createDataFrame(rows, "day string, k string, v long")
+
+
+class DirLayoutTable(AtomicPartitionedTable):
+    """The table as it wrote before the rows layout: one directory per
+    value, keys listed after the write, and manifests with neither a
+    ``layouts`` entry nor a ``schema``. Only for tables that hold no
+    rows-layout snapshot (its manifests drop their ``layouts``)."""
+
+    def _write_snapshot(self, df, path):
+        df.write.mode("errorifexists").partitionBy(self.partition_col).parquet(
+            path
+        )
+        prefix = f"{self.partition_col}="
+        return [
+            name
+            for name in self._list_names(self.DATA_DIR, os.path.basename(path))
+            if name.startswith(prefix)
+        ]
+
+    def _write_file_atomic(self, rel_dir, name, text):
+        doc = json.loads(text)
+        doc.pop("layouts", None)
+        doc.pop("schema", None)
+        super()._write_file_atomic(rel_dir, name, json.dumps(doc))
+
+
+def per_value_rows(spark, table, version=None) -> list[tuple]:
+    """The reference read: each live key's rows, read on its own from
+    the directory that holds them, as sorted ``(k, v, day)`` tuples."""
+    rows = []
+    for key, path in table.current_partition_paths(version).items():
+        value = key.split("=", 1)[1]
+        day = None if value == "__HIVE_DEFAULT_PARTITION__" else value
+        df = spark.read.parquet(path)
+        if path.endswith("/"):  # rows layout: the snapshot dir
+            df = df.filter(
+                F.col("day").isNull() if day is None else F.col("day") == day
+            )
+        rows += [(r["k"], r["v"], day) for r in df.collect()]
+    return sorted(rows, key=repr)
+
+
+def read_rows(df) -> list[tuple]:
+    """``df``'s rows as sorted ``(k, v, day)`` tuples, ``day`` as text
+    (a directory-layout read types it by partition discovery)."""
+    return sorted(
+        (
+            (r["k"], r["v"], None if r["day"] is None else str(r["day"]))
+            for r in df.collect()
+        ),
+        key=repr,
+    )
 
 
 class TestAtomicTable:
@@ -266,7 +319,8 @@ def test_concurrent_publish_merges_against_the_winner(spark, tmp_path):
             real_write(
                 rel_dir, name,
                 '{"version": 2, "snapshot": 1, "partition_col": "day",'
-                ' "partitions": {"day=d1": 1, "day=d2": 1}}',
+                ' "partitions": {"day=d1": 1, "day=d2": 1},'
+                ' "layouts": {"1": "rows"}}',
             )  # the rival publishes first under the same number
             raise CommitConflict("injected lost rename")
         return real_write(rel_dir, name, text)
@@ -852,7 +906,8 @@ def test_publish_primitive_put_if_absent_under_true_race(spark, tmp_path):
 
 
 # ----------------------------------------------------------------------
-# Scan roots: read() passes one root per fully-live snapshot
+# Scan roots: read() passes one root per live snapshot (directory
+# layout: per fully-live snapshot), in both layouts
 # ----------------------------------------------------------------------
 def _day(n: int) -> str:
     return f"2024-01-{n:02d}"
@@ -941,15 +996,15 @@ def _commit_on_legacy_manifest(spark, table):
     _commit_on_legacy_manifest,
 ], ids=lambda f: f.__name__.lstrip("_"))
 def test_scan_roots_read_equals_per_partition_read(spark, tmp_path, build):
-    """read() hands its one parquet scan a ``snap=N`` root for every
-    snapshot whose written partitions are all live, and per-partition
-    paths only for partly superseded snapshots (all of them under a
-    manifest without ``snapshots``). Rows and schema, including the
-    inferred partition type, must equal a read of one path per live
-    partition."""
+    """Directory layout: read() hands its one parquet scan a ``snap=N``
+    root for every snapshot whose written partitions are all live, and
+    per-partition paths only for partly superseded snapshots (all of
+    them under a manifest without ``snapshots``). Rows and schema,
+    including the inferred partition type, must equal a read of one path
+    per live partition."""
     import re
 
-    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+    table = DirLayoutTable(spark, str(tmp_path / "tbl"), "day")
     version, want_roots = build(spark, table)
     got = table.read(version=version)
     want = (
@@ -975,6 +1030,85 @@ def test_scan_roots_read_equals_per_partition_read(spark, tmp_path, build):
     assert re.search(r"InMemoryFileIndex\((\d+) paths\)", plan).group(1) == (
         str(want_roots)
     ), plan
+
+
+#: Live snapshots, and so scan roots, of each table state in the rows
+#: layout.
+ROWS_LAYOUT_ROOTS = {
+    "fully_live": 1, "partly_superseded": 2, "partition_dropped": 1,
+    "null_partition": 2, "crashed_orphan": 1, "after_vacuum": 2,
+    "time_travel": 2, "legacy_manifest": 2, "commit_on_legacy_manifest": 3,
+}
+
+
+@pytest.mark.parametrize("build", [
+    _fully_live, _partly_superseded, _partition_dropped, _null_partition,
+    _crashed_orphan, _after_vacuum, _time_travel, _legacy_manifest,
+    _commit_on_legacy_manifest,
+], ids=lambda f: f.__name__.lstrip("_"))
+def test_rows_layout_read_equals_per_value_read(spark, tmp_path, build):
+    """Rows layout, the same table states: read() is one parquet scan
+    with one root per live snapshot, given the manifest's schema, so the
+    partition column keeps its written type. Its rows equal each live
+    key's rows read on their own from the snapshot that owns the key."""
+    import re
+
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+    version, _dir_roots = build(spark, table)
+    got = table.read(version=version)
+    assert got.dtypes == [("k", "string"), ("v", "bigint"), ("day", "string")]
+    assert read_rows(got) == per_value_rows(spark, table, version)
+    roots = table.scan_roots(version)
+    assert len(roots) == ROWS_LAYOUT_ROOTS[build.__name__.lstrip("_")], roots
+    assert set(roots) == {
+        p.rstrip("/") for p in table.current_partition_paths(version).values()
+    }
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert re.search(r"InMemoryFileIndex\((\d+) paths\)", plan).group(1) == (
+        str(len(roots))
+    ), plan
+
+
+def test_mixed_layout_table(spark, tmp_path):
+    """Rows-layout commits on top of directory-layout snapshots: the
+    read is the union of the two layouts' scans and equals the per-value
+    reference; ``replaced`` drops a key of the old layout; time travel
+    reads both sides of the first rows commit; vacuum reaps superseded
+    snapshots of both kinds."""
+    root = str(tmp_path / "tbl")
+    old = DirLayoutTable(spark, root, "day")
+    _commit_days(spark, old, [1, 2])             # v1, snap=1 (dirs)
+    _commit_days(spark, old, [3])                # v2, snap=2 (dirs)
+    table = AtomicPartitionedTable(spark, root, "day")
+    _commit_days(spark, table, [2], v=20)        # v3, snap=3 (rows)
+    table.commit_overwrite_partitions(           # v4, drops snap=2's day
+        df_of(spark, []), replaced=[_day(3)]
+    )
+    _commit_days(spark, table, [4], v=40)        # v5, snap=5 (rows)
+    _commit_days(spark, table, [4], v=44)        # v6, snap=6 supersedes 5
+
+    want = [("k1", 1, _day(1)), ("k2", 20, _day(2)), ("k4", 44, _day(4))]
+    got = table.read()
+    assert read_rows(got) == per_value_rows(spark, table) == want
+    assert dict(got.dtypes)["day"] == "string"  # the manifest's schema
+    assert table.partition_dir_name(_day(3)) not in (
+        table.current_partition_paths()
+    )
+    # before the first rows commit: a directory-layout table as it was
+    assert dict(table.read(version=2).dtypes)["day"] == "date"
+    assert read_rows(table.read(version=2)) == [
+        ("k1", 1, _day(1)), ("k2", 1, _day(2)), ("k3", 1, _day(3)),
+    ]
+    assert read_rows(table.read(version=3)) == per_value_rows(
+        spark, table, 3
+    ) == [("k1", 1, _day(1)), ("k2", 20, _day(2)), ("k3", 1, _day(3))]
+
+    assert table.vacuum(grace_seconds=0) == 3  # snap=2, 4 and 5
+    assert sorted(os.listdir(os.path.join(root, "data"))) == [
+        "snap=1", "snap=3", "snap=6",
+    ]
+    assert read_rows(table.read()) == want
 
 
 def test_manifest_snapshots_carry_forward_only_live_snapshots(spark, tmp_path):

@@ -19,10 +19,11 @@ LISTING_THRESHOLD = 32
 def test_gold_read_over_threshold_starts_no_listing_job(
     spark, tmp_path, job_task_counts,
 ):
-    """40 partitions written by two commits of 20: read() passes two
-    snapshot roots, so building the DataFrame lists them on the driver.
-    One root per partition (40 > 32) made Spark list them with a job of
-    one task per path."""
+    """40 values written by two commits of 20: building the read starts
+    no job. The scan has one root per live snapshot, which the driver
+    lists (one root per value, 40 > 32, made Spark list them with a job
+    of one task per path), and the manifest's schema, so no footer job
+    infers one."""
     table = AtomicPartitionedTable(spark, str(tmp_path / "gold"), "day")
     for first in (0, 20):
         table.commit_overwrite_partitions(spark.createDataFrame(
@@ -30,11 +31,26 @@ def test_gold_read_over_threshold_starts_no_listing_job(
             "day string, v long",
         ))
     assert len(table.current_partition_paths()) > LISTING_THRESHOLD
-    tasks = job_task_counts(table.read)
-    # the listing job runs one task per path and starts only above the
-    # threshold; what may run is the one-task footer-inference job
-    assert all(n <= LISTING_THRESHOLD for n in tasks), tasks
-    assert len(tasks) <= 1, tasks
+    assert job_task_counts(table.read) == []
+
+
+def test_commit_and_read_back_run_the_jobs_of_one_plain_write(
+    spark, tmp_path, job_task_counts,
+):
+    """A commit runs exactly the jobs of one plain write of its frame:
+    its keys ride the write, no listing follows it, and building the
+    read of the committed table starts no job."""
+    df = spark.range(0, 1000, 1, 4).selectExpr(
+        "CAST(id % 40 AS STRING) AS day", "id AS v"
+    )
+    plain = job_task_counts(
+        lambda: df.write.parquet(str(tmp_path / "plain"))
+    )
+    table = AtomicPartitionedTable(spark, str(tmp_path / "gold"), "day")
+    committed = job_task_counts(
+        lambda: (table.commit_overwrite_partitions(df), table.read())
+    )
+    assert committed == plain, (committed, plain)
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "csv"])

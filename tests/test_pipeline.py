@@ -535,6 +535,43 @@ class TestWarehouseJdbc:
         }
 
 
+def test_read_gold_keeps_the_aggregate_schema(spark, tmp_path):
+    """Gold reads back the aggregate's output schema with the partition
+    column last, whether it holds rows or was never built: a ``day``
+    of yyyy-MM-dd strings stays a string, not a date typed from
+    directory names."""
+    from pyspark.sql import functions as F
+
+    from serverless_etl_aws_spark.pipeline.rollup import PartitionedRollup
+
+    silver = str(tmp_path / "silver")
+    spark.createDataFrame(
+        [("2024-03-01", "a", 10), ("2024-03-02", "b", 7)],
+        "day string, kind string, v long",
+    ).write.parquet(silver)
+
+    def agg(df):
+        return df.groupBy("day", "kind").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("v").alias("total")
+        )
+
+    out = agg(spark.read.parquet(silver))
+    want = [(f.name, f.dataType) for f in out.schema.fields if f.name != "day"]
+    want.append(("day", out.schema["day"].dataType))
+
+    def roll(name):
+        return PartitionedRollup(
+            spark, silver_dir=silver, gold_dir=str(tmp_path / name),
+            partition_col="day", aggregate=agg,
+        )
+
+    built = roll("gold")
+    built.refresh_partitions(["2024-03-01", "2024-03-02"])
+    empty = roll("never_built").read_gold(empty_schema=out.schema)
+    for gold in (built.read_gold(), empty):
+        assert [(f.name, f.dataType) for f in gold.schema.fields] == want
+
+
 def test_rollup_upsert_merges_existing_and_creates_new(spark, tmp_path):
     """MERGE semantics: a delta row for an existing (partition, key) must
     MODIFY that gold row in place (no duplicate), and a delta row for an
