@@ -422,6 +422,11 @@ def kcore_peel(
     truncated lazily — it only materializes under the next round's
     degree job. At billion-node scale the same loop runs with shuffle
     semi-joins (drop the hint); the degree checkpoint stays node-sized.
+
+    It runs jobs at BUILD time: one Spark job per peel round runs while
+    the DataFrame is constructed, not at the caller's action. So a
+    caller that builds ``graph_kcore`` without acting on it still pays
+    the whole peel; building it is not free.
     """
     from pyspark.sql import Observation
 

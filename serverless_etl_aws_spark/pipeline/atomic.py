@@ -23,10 +23,9 @@ commit protocol (the Iceberg/Delta idea, reduced to its minimum):
   ``<root>/_manifests/manifest-N.json``. It maps each live partition key
   (``partition_dir_name``: ``<pcol>=<Hive-escaped value>``) to the
   snapshot that owns it (``partitions``), records how many keys each
-  still-live snapshot wrote (``snapshots``, ``{"N": k}``), the layout of
-  each live snapshot (``layouts``, ``{"N": "rows"}``) and the schema of
-  the last committed frame (``schema``). A commit takes its keys from an
-  ``Observation`` riding its write (the set of values cast to string,
+  still-live snapshot wrote (``snapshots``, ``{"N": k}``) and the schema
+  of the last committed frame (``schema``). A commit takes its keys from
+  an ``Observation`` riding its write (the set of values cast to string,
   plus a NULL flag), never from a listing, and carries forward the
   entries of every snapshot that still owns a live key; entries of
   fully superseded snapshots are dropped.
@@ -54,13 +53,9 @@ scan's filter. The roots number the live snapshots, not the values, so
 Spark lists them on the driver unless more than
 ``parallelPartitionDiscovery.threshold`` (32) snapshots are live.
 
-Tables written before the rows layout stored one directory per value
-(``data/snap=N/<pcol>=<value>/``) and have no ``layouts`` entry for
-those snapshots. They keep their read: one root per fully-live snapshot
-and one path per partition for a partly superseded one (all of them
-under a manifest without ``snapshots``), with partition discovery typing
-the column (or the manifest's schema, once a rows commit wrote one). A
-table holding both layouts reads as the union of the two scans.
+A manifest without ``snapshots`` or ``schema`` (one from a table that
+stored a directory per value) raises :class:`ManifestFormatError` on
+read and commit: the table is refused, never misread.
 
 All metadata I/O goes through the Hadoop FileSystem API so
 the table can live on any supported scheme (file:, hdfs:, s3a: — with the
@@ -84,18 +79,12 @@ import uuid
 from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .ingest import MAX_RECORDS_PER_FILE
-
-#: Layout tag a manifest records for a snapshot written as rows (one
-#: file per write task). A live snapshot without one is in the directory
-#: layout (one ``<pcol>=<value>/`` directory per value).
-ROWS = "rows"
 
 #: Fault-injection hook: called with a stage name at the commit protocol's
 #: observable points ("staged" = snapshot data fully written, manifest not
@@ -125,6 +114,12 @@ class UnsafeFilesystemError(RuntimeError):
     capability probe, never after a commit has published."""
 
 
+class ManifestFormatError(RuntimeError):
+    """A published manifest lacks a field every manifest must carry
+    (``partitions``, ``snapshots``, ``schema``), so the table's state
+    cannot be read from it."""
+
+
 class CommitConflict(RuntimeError):
     """A manifest publish lost its rename race. Raised to the caller only
     after MAX_PUBLISH_RETRIES failed attempts; internally it drives the
@@ -138,12 +133,9 @@ class Manifest:
 
     #: partition key (``partition_dir_name``) → owning snapshot
     partitions: dict[str, int] = field(default_factory=dict)
-    #: live snapshot → keys it wrote (empty under a manifest written
-    #: before the field existed: none of its snapshots reads as whole)
+    #: live snapshot → keys it wrote
     snapshots: dict[int, int] = field(default_factory=dict)
-    #: live snapshot → layout tag (:data:`ROWS`); absent = directories
-    layouts: dict[int, str] = field(default_factory=dict)
-    #: schema of the last committed frame (None before the rows layout)
+    #: schema of the last committed frame (None for an empty table)
     schema: StructType | None = None
 
 
@@ -329,28 +321,49 @@ class AtomicPartitionedTable:
             stream.write(bytearray(text.encode("utf-8")))
         finally:
             stream.close()
-        if self._scheme() == "file":
-            tmp_local = str(tmp.toUri().getPath())
-            final_local = str(final.toUri().getPath())
-            if os.path.isabs(tmp_local) and os.path.isabs(final_local):
-                try:
-                    os.link(tmp_local, final_local)
-                except FileExistsError:
-                    fs.delete(tmp, False)
-                    raise CommitConflict(
-                        f"atomic commit conflict: {final} already exists "
-                        f"(concurrent writer)"
-                    ) from None
+        final_local = self._local_path(final)
+        if final_local is not None:
+            try:
+                os.link(self._local_path(tmp), final_local)
+            except FileExistsError:
                 fs.delete(tmp, False)
-                return
-            # relative local root (no stable cwd contract): fall through
-            # to the rename path — single-process use only
+                raise CommitConflict(
+                    f"atomic commit conflict: {final} already exists "
+                    f"(concurrent writer)"
+                ) from None
+            fs.delete(tmp, False)
+            return
         if not self._rename(tmp, final):
             fs.delete(tmp, False)
             raise CommitConflict(
                 f"atomic commit conflict: {final} already exists "
                 f"(concurrent writer)"
             )
+
+    def _local_path(self, jpath) -> str | None:
+        """``jpath`` as an absolute local path on a ``file:`` table, where
+        the kernel's atomic create primitives replace Hadoop's
+        check-then-act ones; None on any other scheme, and under a
+        relative local root (no stable cwd contract: single-process use
+        only)."""
+        if self._scheme() != "file":
+            return None
+        path = str(jpath.toUri().getPath())
+        return path if os.path.isabs(path) else None
+
+    def _create_exclusive(self, jpath) -> None:
+        """Create the empty file ``jpath``, failing if it exists. Hadoop's
+        local ``create`` with overwrite=False is check-then-act (an
+        ``exists`` test, then a plain open): with 8 threads racing one
+        path on a 4-vCPU host, 9 of 40 rounds had more than one winner.
+        ``file:`` therefore uses ``O_CREAT | O_EXCL``; HDFS's create is
+        NameNode-atomic."""
+        local = self._local_path(jpath)
+        if local is None:
+            self._fs().create(jpath, False).close()
+            return
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        os.close(os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644))
 
     def _list_names(self, *parts: str) -> list[str]:
         fs = self._fs()
@@ -387,7 +400,8 @@ class AtomicPartitionedTable:
 
     def _manifest(self, version: int | None = None) -> Manifest:
         """The manifest of ``version`` (default: current); an empty
-        :class:`Manifest` for an empty table."""
+        :class:`Manifest` for an empty table. The file comes from disk:
+        one without a required field raises :class:`ManifestFormatError`."""
         v = self.current_version() if version is None else version
         if v == 0:
             return Manifest()
@@ -401,60 +415,33 @@ class AtomicPartitionedTable:
         doc = json.loads(self._read_small_file(
             self._jpath(self.MANIFEST_DIR, f"manifest-{v}.json")
         ))
-        schema = doc.get("schema")
+        missing = [
+            k for k in ("partitions", "snapshots", "schema") if k not in doc
+        ]
+        if missing:
+            raise ManifestFormatError(
+                f"atomic table {self.root}: manifest version {v} has no "
+                f"{' or '.join(missing)} (a table that stored one directory "
+                f"per value); it cannot be read or committed to"
+            )
         return Manifest(
             partitions={str(k): int(s) for k, s in doc["partitions"].items()},
-            snapshots={
-                int(s): int(k) for s, k in doc.get("snapshots", {}).items()
-            },
-            layouts={int(s): t for s, t in doc.get("layouts", {}).items()},
-            schema=None if schema is None else StructType.fromJson(schema),
+            snapshots={int(s): int(k) for s, k in doc["snapshots"].items()},
+            schema=StructType.fromJson(doc["schema"]),
         )
 
     def current_partition_paths(
         self, version: int | None = None
     ) -> dict[str, str]:
-        """Live partition key → the directory that holds its rows: the
-        snapshot dir (``.../snap=N/``) under the rows layout, the key's
-        own dir (``.../snap=N/<key>``) under the directory layout. For
-        consumers that need file-level introspection, e.g. tests
-        asserting untouched partitions were not rewritten. ``version``
-        pins a historical manifest (time travel)."""
-        m = self._manifest(version)
+        """Live partition key → the snapshot dir (``.../snap=N/``) that
+        holds its rows. For consumers that need file-level introspection,
+        e.g. tests asserting untouched partitions were not rewritten.
+        ``version`` pins a historical manifest (time travel)."""
         data = f"{self.root}/{self.DATA_DIR}"
         return {
             key: f"{data}/snap={snap}/"
-            + ("" if m.layouts.get(snap) == ROWS else key)
-            for key, snap in m.partitions.items()
+            for key, snap in self._manifest(version).partitions.items()
         }
-
-    def _dir_layout_roots(self, m: Manifest) -> list[str]:
-        """Scan paths of the directory-layout snapshots: the snapshot dir
-        of each one whose written partitions are all still live, and the
-        partition dirs of every other one."""
-        live = Counter(m.partitions.values())
-        data = f"{self.root}/{self.DATA_DIR}"
-        dirs = {s for s in live if m.layouts.get(s) != ROWS}
-        whole = {s for s in dirs if m.snapshots.get(s) == live[s]}
-        return sorted(
-            [f"{data}/snap={snap}" for snap in whole]
-            + [
-                f"{data}/snap={snap}/{key}"
-                for key, snap in m.partitions.items()
-                if snap in dirs and snap not in whole
-            ]
-        )
-
-    def scan_roots(self, version: int | None = None) -> list[str]:
-        """Every path :meth:`read` scans: the ``data/snap=N`` dir of each
-        live rows-layout snapshot, and the directory-layout roots (see
-        the module docstring)."""
-        m = self._manifest(version)
-        data = f"{self.root}/{self.DATA_DIR}"
-        rows = {s for s in m.partitions.values() if m.layouts.get(s) == ROWS}
-        return sorted(
-            [f"{data}/snap={s}" for s in rows] + self._dir_layout_roots(m)
-        )
 
     def _key_value(self, key: str) -> str | None:
         """The value (as Spark casts it to string) a manifest key names:
@@ -471,14 +458,11 @@ class AtomicPartitionedTable:
         version: int | None = None,
         empty_schema=None,
     ) -> DataFrame:
-        """The live rows, ``partition_col`` last. Rows-layout snapshots
-        are one parquet scan given the manifest's schema, so the column
+        """The live rows, ``partition_col`` last: one parquet scan over
+        the live snapshots given the manifest's schema, so the column
         keeps the type it was written with and no footer-inference or
         listing job runs; a partly superseded snapshot is filtered to its
-        live keys. Directory-layout snapshots (tables written before the
-        rows layout) read by partition discovery over
-        :meth:`_dir_layout_roots`; a table holding both layouts reads as
-        the union of the two scans.
+        live keys.
 
         ``version`` reads the table AS OF that commit (time travel):
         manifests are immutable and snapshots are append-only, so any
@@ -513,38 +497,31 @@ class AtomicPartitionedTable:
             )
             raise FileNotFoundError(f"atomic table {self.root} {state}")
         data = f"{self.root}/{self.DATA_DIR}"
-        reader = self.spark.read.option("basePath", data)
-        if m.schema is not None:
-            pcol = m.schema[self.partition_col]
-            reader = reader.schema(StructType(
+        pcol = m.schema[self.partition_col]
+        live = Counter(m.partitions.values())
+        snaps = sorted(live)
+        scan = (
+            self.spark.read.option("basePath", data)
+            .schema(StructType(
                 [f for f in m.schema.fields if f.name != pcol.name] + [pcol]
             ))
-        scans = []
-        live = Counter(m.partitions.values())
-        rows = sorted(s for s in live if m.layouts.get(s) == ROWS)
-        if rows:
-            scan = reader.parquet(*[f"{data}/snap={s}" for s in rows])
-            partial = [s for s in rows if m.snapshots.get(s) != live[s]]
-            if partial:
-                keep = F.col("snap").isin(
-                    [s for s in rows if s not in partial]
+            .parquet(*[f"{data}/snap={s}" for s in snaps])
+        )
+        partial = [s for s in snaps if m.snapshots.get(s) != live[s]]
+        if partial:
+            keep = F.col("snap").isin([s for s in snaps if s not in partial])
+            key_str = F.col(self.partition_col).cast("string")
+            for s in partial:
+                keep = keep | (F.col("snap") == s) & partition_predicate(
+                    key_str,
+                    [
+                        self._key_value(k)
+                        for k, owner in m.partitions.items()
+                        if owner == s
+                    ],
                 )
-                key_str = F.col(self.partition_col).cast("string")
-                for s in partial:
-                    keep = keep | (F.col("snap") == s) & partition_predicate(
-                        key_str,
-                        [
-                            self._key_value(k)
-                            for k, owner in m.partitions.items()
-                            if owner == s
-                        ],
-                    )
-                scan = scan.filter(keep)
-            scans.append(scan)
-        dir_roots = self._dir_layout_roots(m)
-        if dir_roots:
-            scans.append(reader.parquet(*dir_roots))
-        return reduce(DataFrame.unionByName, scans).drop("snap")
+            scan = scan.filter(keep)
+        return scan.drop("snap")
 
     RESERVE_PREFIX = ".reserved-snap-"
 
@@ -565,30 +542,38 @@ class AtomicPartitionedTable:
         return max(ids) + 1
 
     def _reserve_snapshot(self) -> int:
-        """Claim a snapshot number exclusively by atomically creating a
-        hidden marker file (``create`` with overwrite=False — atomic on
-        HDFS; Spark's file sources skip dot-files, so the marker is
-        invisible to readers). ``errorifexists`` on the data write alone
-        is check-then-act: two racing writers could both pass the
-        existence check and interleave task files INSIDE one snapshot
-        dir, which would corrupt the snapshot without any error — the
-        reservation closes that window."""
+        """Claim a snapshot number exclusively by creating a hidden
+        marker file (:meth:`_create_exclusive`; Spark's file sources skip
+        dot-files, so the marker is invisible to readers).
+        ``errorifexists`` on the data write alone is check-then-act: two
+        racing writers could both pass the existence check and interleave
+        task files INSIDE one snapshot dir, which would corrupt the
+        snapshot without any error — the reservation closes that window.
+
+        A won marker whose ``snap=N`` dir already exists does not count:
+        a rival reserved N, wrote it and released the marker after this
+        writer's :meth:`_next_snapshot` scan, so N is taken (writing on
+        would fail with ``PATH_ALREADY_EXISTS``). The marker is dropped
+        and the number rescanned."""
         fs = self._fs()
-        last_exc: Exception | None = None
+        last = "none"
         for _attempt in range(self.MAX_PUBLISH_RETRIES * 4):
             snap = self._next_snapshot()
             marker = self._jpath(
                 self.DATA_DIR, f"{self.RESERVE_PREFIX}{snap}"
             )
             try:
-                stream = fs.create(marker, False)
-                stream.close()
+                self._create_exclusive(marker)
+            except Exception as exc:  # rival holds it — rescan
+                last = str(exc)
+                continue
+            if not fs.exists(self._jpath(self.DATA_DIR, f"snap={snap}")):
                 return snap
-            except Exception as exc:  # rival claimed it — rescan
-                last_exc = exc
+            fs.delete(marker, False)
+            last = f"snap={snap} already written"
         raise CommitConflict(
             f"atomic commit on {self.root} could not reserve a snapshot "
-            f"number (last error: {last_exc})"
+            f"number (last error: {last})"
         )
 
     #: Characters Spark's ExternalCatalogUtils.escapePathName escapes in
@@ -597,10 +582,9 @@ class AtomicPartitionedTable:
 
     def partition_dir_name(self, value) -> str:
         """The manifest key of a partition value: the hive-style
-        directory name a ``partitionBy`` write gives it (the directory
-        layout's dir names are the keys, so one key space covers both
-        layouts). Mirrors Spark's escapePathName so ``replaced`` values
-        round-trip for strings with special characters and for NULL.
+        directory name a ``partitionBy`` write would give it. Mirrors
+        Spark's escapePathName so ``replaced`` values round-trip for
+        strings with special characters and for NULL.
 
         Only None, int, and str values are accepted: Python's str() of
         bool/float/datetime diverges from Spark's Cast-to-string
@@ -678,20 +662,19 @@ class AtomicPartitionedTable:
         silently lost.
 
         Protocol: write ``df`` into a fresh ``snap=N`` dir (invisible to
-        readers; N is unique — a racing writer that picks the same N
-        fails the errorifexists data write), then publish a manifest
-        whose VERSION is chosen at publish time: read the current
-        mapping, apply the drops and this snapshot's keys, and rename a
-        temp file to ``manifest-<current+1>.json``. The rename-to-fresh-
-        path is the atomic commit point; if a concurrent writer won that
-        version number, the rename fails and the publish RETRIES against
-        the winner's mapping (optimistic concurrency, partition-level
-        last-writer-wins — the Iceberg commit loop). Choosing the
-        version at publish time is what makes a slow writer safe: its
-        base mapping and its manifest name are read in the same attempt,
-        so it can never publish an older-numbered manifest that silently
-        loses to a faster writer. A crash before the rename leaves the
-        previous manifest with only orphan files on disk; a replay
+        readers; N is unique — :meth:`_reserve_snapshot` claims it), then
+        publish a manifest whose VERSION is chosen at publish time: read
+        the current mapping, apply the drops and this snapshot's keys, and
+        rename a temp file to ``manifest-<current+1>.json``. The
+        rename-to-fresh-path is the atomic commit point; if a concurrent
+        writer won that version number, the rename fails and the publish
+        RETRIES against the winner's mapping (optimistic concurrency,
+        partition-level last-writer-wins — the Iceberg commit loop).
+        Choosing the version at publish time is what makes a slow writer
+        safe: its base mapping and its manifest name are read in the same
+        attempt, so it can never publish an older-numbered manifest that
+        silently loses to a faster writer. A crash before the rename leaves
+        the previous manifest with only orphan files on disk; a replay
         commits the same logical content under the next version. Returns
         the number of partitions (re)written."""
         if "snap" in df.columns:
@@ -723,7 +706,6 @@ class AtomicPartitionedTable:
             for name in written:
                 mapping[name] = snap
             wrote = {**m.snapshots, snap: len(written)}
-            layouts = {**m.layouts, snap: ROWS}
             live = set(mapping.values())
             version = base_version + 1
             manifest = {
@@ -733,9 +715,6 @@ class AtomicPartitionedTable:
                 "partitions": mapping,
                 "snapshots": {
                     str(s): n for s, n in wrote.items() if s in live
-                },
-                "layouts": {
-                    str(s): t for s, t in layouts.items() if s in live
                 },
                 "schema": df.schema.jsonValue(),
             }

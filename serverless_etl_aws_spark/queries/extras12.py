@@ -38,9 +38,9 @@ def scan_atomic_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     and vacuum removed nothing live.
 
     Scale: each commit is one aggregate write of the touched slice; the
-    read is one multi-path parquet scan with partition discovery — the
-    same shape as a normal partitioned table, plus one tiny manifest
-    read."""
+    read is one parquet scan over the live snapshot dirs, given the
+    manifest's schema (no footer-inference or listing job), plus one
+    tiny manifest read."""
     import os
 
     from ..pipeline.atomic import AtomicPartitionedTable

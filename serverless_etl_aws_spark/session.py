@@ -25,7 +25,8 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 #: The engine's runtime SQL confs: :func:`get_spark` builds its session
 #: with them and :func:`tune_for_session` sets them on a session handed in
-#: (the driver's, ``Engine(spark=...)``), so both paths plan alike.
+#: (the driver's, ``Engine(spark=...)``), so both paths plan alike —
+#: except a shuffle-partition count the caller chose, which is kept.
 _RUNTIME_SQL_CONFS: dict[str, str] = {
     # streaming stateful ops pin their shuffle-partition count at
     # checkpoint creation and AQE does not coalesce them — 200 tiny
@@ -159,8 +160,19 @@ def ship_package(spark: SparkSession) -> None:
 def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime SQL confs to an externally-provided
     session (the driver hands us its own SparkSession — static confs like
-    driver memory can't change, but SQL confs can)."""
+    driver memory can't change, but SQL confs can). A shuffle-partition
+    count the caller chose is kept: the engine's applies only while the
+    session still holds Spark's built-in default."""
+    spark_default = (
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS()
+        .defaultValueString()
+    )
     for k, v in _RUNTIME_SQL_CONFS.items():
+        if (
+            k == "spark.sql.shuffle.partitions"
+            and spark.conf.get(k) != spark_default
+        ):
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:

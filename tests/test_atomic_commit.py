@@ -48,56 +48,23 @@ def df_of(spark, rows):
     return spark.createDataFrame(rows, "day string, k string, v long")
 
 
-class DirLayoutTable(AtomicPartitionedTable):
-    """The table as it wrote before the rows layout: one directory per
-    value, keys listed after the write, and manifests with neither a
-    ``layouts`` entry nor a ``schema``. Only for tables that hold no
-    rows-layout snapshot (its manifests drop their ``layouts``)."""
-
-    def _write_snapshot(self, df, path):
-        df.write.mode("errorifexists").partitionBy(self.partition_col).parquet(
-            path
-        )
-        prefix = f"{self.partition_col}="
-        return [
-            name
-            for name in self._list_names(self.DATA_DIR, os.path.basename(path))
-            if name.startswith(prefix)
-        ]
-
-    def _write_file_atomic(self, rel_dir, name, text):
-        doc = json.loads(text)
-        doc.pop("layouts", None)
-        doc.pop("schema", None)
-        super()._write_file_atomic(rel_dir, name, json.dumps(doc))
-
-
 def per_value_rows(spark, table, version=None) -> list[tuple]:
-    """The reference read: each live key's rows, read on its own from
-    the directory that holds them, as sorted ``(k, v, day)`` tuples."""
+    """The reference read: each live key's rows, read on their own from
+    the snapshot dir that owns the key (a row belongs to the key its
+    value renders to), as sorted ``(k, v, day)`` tuples."""
     rows = []
     for key, path in table.current_partition_paths(version).items():
-        value = key.split("=", 1)[1]
-        day = None if value == "__HIVE_DEFAULT_PARTITION__" else value
-        df = spark.read.parquet(path)
-        if path.endswith("/"):  # rows layout: the snapshot dir
-            df = df.filter(
-                F.col("day").isNull() if day is None else F.col("day") == day
-            )
-        rows += [(r["k"], r["v"], day) for r in df.collect()]
+        rows += [
+            (r["k"], r["v"], r["day"])
+            for r in spark.read.parquet(path).collect()
+            if table.partition_dir_name(r["day"]) == key
+        ]
     return sorted(rows, key=repr)
 
 
 def read_rows(df) -> list[tuple]:
-    """``df``'s rows as sorted ``(k, v, day)`` tuples, ``day`` as text
-    (a directory-layout read types it by partition discovery)."""
-    return sorted(
-        (
-            (r["k"], r["v"], None if r["day"] is None else str(r["day"]))
-            for r in df.collect()
-        ),
-        key=repr,
-    )
+    """``df``'s rows as sorted ``(k, v, day)`` tuples."""
+    return sorted(((r["k"], r["v"], r["day"]) for r in df.collect()), key=repr)
 
 
 class TestAtomicTable:
@@ -312,16 +279,16 @@ def test_concurrent_publish_merges_against_the_winner(spark, tmp_path):
     # in flight: force B's FIRST rename to lose, then let it through
     real_write = table._write_file_atomic
     state = {"failed": False}
+    rival = json.dumps({
+        "version": 2, "snapshot": 1, "partition_col": "day",
+        "partitions": {"day=d1": 1, "day=d2": 1}, "snapshots": {"1": 2},
+        "schema": df_of(spark, []).schema.jsonValue(),
+    })
 
     def racing_write(rel_dir, name, text):
         if not state["failed"] and name.startswith("manifest-"):
             state["failed"] = True
-            real_write(
-                rel_dir, name,
-                '{"version": 2, "snapshot": 1, "partition_col": "day",'
-                ' "partitions": {"day=d1": 1, "day=d2": 1},'
-                ' "layouts": {"1": "rows"}}',
-            )  # the rival publishes first under the same number
+            real_write(rel_dir, name, rival)  # the rival publishes first
             raise CommitConflict("injected lost rename")
         return real_write(rel_dir, name, text)
 
@@ -906,8 +873,7 @@ def test_publish_primitive_put_if_absent_under_true_race(spark, tmp_path):
 
 
 # ----------------------------------------------------------------------
-# Scan roots: read() passes one root per live snapshot (directory
-# layout: per fully-live snapshot), in both layouts
+# Scan roots: read() passes one root per live snapshot
 # ----------------------------------------------------------------------
 def _day(n: int) -> str:
     return f"2024-01-{n:02d}"
@@ -927,7 +893,7 @@ def _fully_live(spark, table):
 def _partly_superseded(spark, table):
     _commit_days(spark, table, [1, 2, 3])
     _commit_days(spark, table, [2], v=20)
-    return None, 2 + 1  # snap=1's day 1 and day 3, all of snap=2
+    return None, 2  # snap=1 (days 1 and 3) and snap=2
 
 
 def _partition_dropped(spark, table):
@@ -941,7 +907,7 @@ def _partition_dropped(spark, table):
 def _null_partition(spark, table):
     _commit_days(spark, table, [None, 1])
     _commit_days(spark, table, [None], v=10)
-    return None, 1 + 1  # snap=1's day 1, all of snap=2 (the NULL dir)
+    return None, 2  # snap=1 (day 1) and snap=2 (the NULL key)
 
 
 def _crashed_orphan(spark, table):
@@ -955,76 +921,47 @@ def _after_vacuum(spark, table):
     _crashed_orphan(spark, table)
     _commit_days(spark, table, [1], v=9)
     table.vacuum(grace_seconds=0)  # the test owns the table exclusively
-    return None, 1 + 1  # snap=1's day 2, all of snap=3
+    return None, 2  # snap=1 (day 2) and snap=3
 
 
 def _time_travel(spark, table):
     _commit_days(spark, table, [1, 2])
     _commit_days(spark, table, [2], v=20)
     _commit_days(spark, table, [1, 3], v=30)
-    return 2, 1 + 1  # as of v2: snap=1's day 1, all of snap=2
+    return 2, 2  # as of v2: snap=1 (day 1) and snap=2
 
 
-def _legacy_manifest(spark, table):
-    """Re-publish the current state the way a writer that predates the
-    ``snapshots`` field wrote it."""
-    import json
-
-    _commit_days(spark, table, [1, 2])
-    _commit_days(spark, table, [3])
-    version = table.current_version()
-    doc = json.loads(table._read_small_file(
-        table._jpath(table.MANIFEST_DIR, f"manifest-{version}.json")
-    ))
-    del doc["snapshots"]
-    doc["version"] = version + 1
-    table._write_file_atomic(
-        table.MANIFEST_DIR, f"manifest-{version + 1}.json", json.dumps(doc)
+def _escaped_keys(spark, table):
+    """Keys Hive escaping changes, in a snapshot a later commit partly
+    supersedes: its read filter must map each live key back to the value
+    it names."""
+    values = ["x:y", "a%b", "p/q", "t\tab", "é=1", None, "d1"]
+    table.commit_overwrite_partitions(
+        df_of(spark, [(d, f"k{i}", 1) for i, d in enumerate(values)])
     )
-    return None, 3  # one path per partition, as before the field
-
-
-def _commit_on_legacy_manifest(spark, table):
-    _legacy_manifest(spark, table)
-    _commit_days(spark, table, [4])
-    return None, 3 + 1  # legacy snapshots per partition, snap=3 whole
+    table.commit_overwrite_partitions(df_of(spark, [("d1", "k6", 2)]))
+    return None, 2  # snap=1 (all but d1) and snap=2
 
 
 @pytest.mark.parametrize("build", [
     _fully_live, _partly_superseded, _partition_dropped, _null_partition,
-    _crashed_orphan, _after_vacuum, _time_travel, _legacy_manifest,
-    _commit_on_legacy_manifest,
+    _crashed_orphan, _after_vacuum, _time_travel, _escaped_keys,
 ], ids=lambda f: f.__name__.lstrip("_"))
-def test_scan_roots_read_equals_per_partition_read(spark, tmp_path, build):
-    """Directory layout: read() hands its one parquet scan a ``snap=N``
-    root for every snapshot whose written partitions are all live, and
-    per-partition paths only for partly superseded snapshots (all of
-    them under a manifest without ``snapshots``). Rows and schema,
-    including the inferred partition type, must equal a read of one path
-    per live partition."""
+def test_rows_layout_read_equals_per_value_read(spark, tmp_path, build):
+    """read() is one parquet scan with one root per live snapshot, given
+    the manifest's schema, so the partition column keeps its written
+    type. Its rows equal each live key's rows read on their own from the
+    snapshot that owns the key."""
     import re
 
-    table = DirLayoutTable(spark, str(tmp_path / "tbl"), "day")
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
     version, want_roots = build(spark, table)
     got = table.read(version=version)
-    want = (
-        spark.read.option("basePath", f"{table.root}/{table.DATA_DIR}")
-        .parquet(*sorted(table.current_partition_paths(version).values()))
-        .drop("snap")
+    assert got.dtypes == [("k", "string"), ("v", "bigint"), ("day", "string")]
+    assert read_rows(got) == per_value_rows(spark, table, version)
+    assert len(set(table.current_partition_paths(version).values())) == (
+        want_roots
     )
-    assert got.schema == want.schema
-    assert dict(got.dtypes)["day"] == "date"
-    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
-        map(tuple, want.collect()), key=repr
-    )
-    roots = table.scan_roots(version)
-    assert len(roots) == want_roots, roots
-    live = set(table.current_partition_paths(version).values())
-    # every root is a live partition dir or the dir of a snapshot that
-    # owns live partitions — never an orphan or superseded snapshot
-    assert all(
-        r in live or any(p.startswith(r + "/") for p in live) for r in roots
-    ), roots
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1, plan
     assert re.search(r"InMemoryFileIndex\((\d+) paths\)", plan).group(1) == (
@@ -1032,88 +969,89 @@ def test_scan_roots_read_equals_per_partition_read(spark, tmp_path, build):
     ), plan
 
 
-#: Live snapshots, and so scan roots, of each table state in the rows
-#: layout.
-ROWS_LAYOUT_ROOTS = {
-    "fully_live": 1, "partly_superseded": 2, "partition_dropped": 1,
-    "null_partition": 2, "crashed_orphan": 1, "after_vacuum": 2,
-    "time_travel": 2, "legacy_manifest": 2, "commit_on_legacy_manifest": 3,
-}
-
-
-@pytest.mark.parametrize("build", [
-    _fully_live, _partly_superseded, _partition_dropped, _null_partition,
-    _crashed_orphan, _after_vacuum, _time_travel, _legacy_manifest,
-    _commit_on_legacy_manifest,
-], ids=lambda f: f.__name__.lstrip("_"))
-def test_rows_layout_read_equals_per_value_read(spark, tmp_path, build):
-    """Rows layout, the same table states: read() is one parquet scan
-    with one root per live snapshot, given the manifest's schema, so the
-    partition column keeps its written type. Its rows equal each live
-    key's rows read on their own from the snapshot that owns the key."""
+@pytest.mark.parametrize("field", ["snapshots", "schema"])
+def test_manifest_without_a_required_field_is_refused(spark, tmp_path, field):
+    """A manifest without ``snapshots`` or ``schema`` (a table that
+    stored one directory per value) makes read() and a commit raise
+    ManifestFormatError naming the table and the version; the table is
+    never misread and no manifest is published."""
     import re
 
+    from serverless_etl_aws_spark.pipeline.atomic import ManifestFormatError
+
     table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
-    version, _dir_roots = build(spark, table)
-    got = table.read(version=version)
-    assert got.dtypes == [("k", "string"), ("v", "bigint"), ("day", "string")]
-    assert read_rows(got) == per_value_rows(spark, table, version)
-    roots = table.scan_roots(version)
-    assert len(roots) == ROWS_LAYOUT_ROOTS[build.__name__.lstrip("_")], roots
-    assert set(roots) == {
-        p.rstrip("/") for p in table.current_partition_paths(version).values()
-    }
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FileScan parquet") == 1, plan
-    assert re.search(r"InMemoryFileIndex\((\d+) paths\)", plan).group(1) == (
-        str(len(roots))
-    ), plan
-
-
-def test_mixed_layout_table(spark, tmp_path):
-    """Rows-layout commits on top of directory-layout snapshots: the
-    read is the union of the two layouts' scans and equals the per-value
-    reference; ``replaced`` drops a key of the old layout; time travel
-    reads both sides of the first rows commit; vacuum reaps superseded
-    snapshots of both kinds."""
-    root = str(tmp_path / "tbl")
-    old = DirLayoutTable(spark, root, "day")
-    _commit_days(spark, old, [1, 2])             # v1, snap=1 (dirs)
-    _commit_days(spark, old, [3])                # v2, snap=2 (dirs)
-    table = AtomicPartitionedTable(spark, root, "day")
-    _commit_days(spark, table, [2], v=20)        # v3, snap=3 (rows)
-    table.commit_overwrite_partitions(           # v4, drops snap=2's day
-        df_of(spark, []), replaced=[_day(3)]
+    _commit_days(spark, table, [1, 2])
+    doc = json.loads(table._read_small_file(
+        table._jpath(table.MANIFEST_DIR, "manifest-1.json")
+    ))
+    del doc[field]
+    doc["version"] = 2
+    table._write_file_atomic(
+        table.MANIFEST_DIR, "manifest-2.json", json.dumps(doc)
     )
-    _commit_days(spark, table, [4], v=40)        # v5, snap=5 (rows)
-    _commit_days(spark, table, [4], v=44)        # v6, snap=6 supersedes 5
+    match = rf"{re.escape(table.root)}: manifest version 2 has no {field}"
+    with pytest.raises(ManifestFormatError, match=match):
+        table.read()
+    with pytest.raises(ManifestFormatError, match=match):
+        _commit_days(spark, table, [3])
+    assert table.current_version() == 2
 
-    want = [("k1", 1, _day(1)), ("k2", 20, _day(2)), ("k4", 44, _day(4))]
-    got = table.read()
-    assert read_rows(got) == per_value_rows(spark, table) == want
-    assert dict(got.dtypes)["day"] == "string"  # the manifest's schema
-    assert table.partition_dir_name(_day(3)) not in (
-        table.current_partition_paths()
-    )
-    # before the first rows commit: a directory-layout table as it was
-    assert dict(table.read(version=2).dtypes)["day"] == "date"
-    assert read_rows(table.read(version=2)) == [
-        ("k1", 1, _day(1)), ("k2", 1, _day(2)), ("k3", 1, _day(3)),
-    ]
-    assert read_rows(table.read(version=3)) == per_value_rows(
-        spark, table, 3
-    ) == [("k1", 1, _day(1)), ("k2", 20, _day(2)), ("k3", 1, _day(3))]
 
-    assert table.vacuum(grace_seconds=0) == 3  # snap=2, 4 and 5
-    assert sorted(os.listdir(os.path.join(root, "data"))) == [
-        "snap=1", "snap=3", "snap=6",
+def test_late_reservation_skips_a_written_snapshot(spark, tmp_path):
+    """A writer whose snapshot scan ran before a rival's ``snap=N`` write
+    landed can win the ``.reserved-snap-N`` marker the rival released
+    after that write. The reservation must treat the written ``snap=N``
+    as taken and move on; writing into it failed with
+    ``PATH_ALREADY_EXISTS`` (the concurrent-writer tests' flake)."""
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+    table.commit_overwrite_partitions(df_of(spark, [("d1", "a", 1)]))
+    real_next = table._next_snapshot
+    stale = iter([1])  # the scan that predates the rival's snap=1
+    table._next_snapshot = lambda: next(stale, None) or real_next()
+    table.commit_overwrite_partitions(df_of(spark, [("d2", "b", 2)]))
+    assert snapshot(table) == {("d1", "a"): 1, ("d2", "b"): 2}
+    assert sorted(os.listdir(os.path.join(table.root, "data"))) == [
+        "snap=1", "snap=2",
     ]
-    assert read_rows(table.read()) == want
+
+
+def test_reservation_marker_create_is_exclusive_under_true_race(
+    spark, tmp_path
+):
+    """A snapshot number is claimed by creating its marker, so exactly
+    one of the threads racing one marker name may win. Hadoop's local
+    ``create`` with overwrite=False is check-then-act and let two or more
+    threads win some rounds; 40 rounds of 8 threads must each have one
+    winner."""
+    import threading
+
+    table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")
+    n = 8
+    for r in range(40):
+        marker = table._jpath(table.DATA_DIR, f"{table.RESERVE_PREFIX}{r}")
+        wins = []
+        barrier = threading.Barrier(n)
+
+        def racer():
+            barrier.wait(timeout=60)
+            try:
+                table._create_exclusive(marker)
+                wins.append(1)
+            except Exception:  # noqa: BLE001 — a lost race
+                pass
+
+        threads = [threading.Thread(target=racer) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert len(wins) == 1, f"round {r}: {len(wins)} winners"
 
 
 def test_manifest_snapshots_carry_forward_only_live_snapshots(spark, tmp_path):
-    """Each manifest records how many partition dirs every still-live
-    snapshot wrote; a fully superseded snapshot's entry is dropped."""
+    """Each manifest records how many keys every still-live snapshot
+    wrote; a fully superseded snapshot's entry is dropped."""
     import json
 
     table = AtomicPartitionedTable(spark, str(tmp_path / "tbl"), "day")

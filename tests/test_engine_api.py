@@ -263,3 +263,23 @@ def test_tune_for_session_applies_get_spark_runtime_confs(spark):
             if after.get(k) != v:
                 spark.conf.set(k, v)
     assert spark.conf.getAll == before
+
+
+def test_engine_keeps_the_callers_shuffle_partitions(spark, tmp_path):
+    """``Engine(spark)`` tunes a session handed in but keeps the
+    shuffle-partition count its caller chose (the shared test session's
+    8); the engine's count replaces only Spark's built-in default."""
+    from serverless_etl_aws_spark.engine import Engine
+    from serverless_etl_aws_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        Engine(spark, zone_root=str(tmp_path))
+        assert spark.conf.get(key) == "8"
+        spark.conf.set(key, "200")  # Spark's built-in default
+        Engine(spark, zone_root=str(tmp_path))
+        assert spark.conf.get(key) == str(DEFAULT_SHUFFLE_PARTITIONS)
+    finally:
+        spark.conf.set(key, before)
